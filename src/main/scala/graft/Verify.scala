@@ -21,15 +21,34 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in oracle SQL or an exception message would otherwise
+    // make any json.load of oracle_sql.json / errors.json fail.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // a face that throws is recorded (errors.json) and fails the run
+    // once every face has run; its stale dump, if any, is removed
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      .flatMap { case (name, fn) =>
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          deleteTree(Paths.get(s"$outDir/$name"))
+          Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
+        }
       // bound memory across the suite: release the SQL cache AND
       // persistent RDD blocks — localCheckpoints (the dedup family's
       // lineage cuts) live as the latter and clearCache alone leaks
@@ -39,7 +58,10 @@ object Verify {
       try spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       catch { case _: Throwable => () }
+      failure
     }
+    Files.writeString(Paths.get(s"$outDir/errors.json"), failures
+      .map { case (n, msg) => s"${q(n)}: ${q(msg)}" }.mkString("{", ",", "}"))
     // RocksDB state-store parity (VERDICT r5 Next #7): re-run the five
     // core streaming faces under the production provider and require
     // byte-identical results vs the default-provider dump above, so a
@@ -87,18 +109,6 @@ object Verify {
       }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/rocksdb_parity.json"), pj)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -112,5 +122,14 @@ object Verify {
     // sequence and CI-style local runs set SPARK_GRAFT_CENSUS_GATE=1.
     if (sys.env.get("SPARK_GRAFT_CENSUS_GATE").contains("1"))
       graft.tools.CensusGate.main(Array("/root/testdata/sf0.001"))
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} face(s) failed: " +
+        failures.map(_._1).mkString(", ") + s" (see $outDir/errors.json)")
+      sys.exit(1)
+    }
   }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => Files.delete(f))
 }

@@ -53,5 +53,10 @@ final case class Insights(
     s"Total nulls after: $nullsAfter")
 }
 
-/** Aggregates feeding the quality score (app.py:83-92). */
-final case class QualityStats(totalNulls: Long, duplicateRows: Long)
+/** Aggregates feeding the quality score (app.py:83-92) and, with the
+  * row count, the insights (app.py:372-376): everything those read of one
+  * table version. The mission detector produces them as a by-product of
+  * its own jobs, so a session can score without rescanning. `rows` is 0
+  * where only the score's inputs are given. */
+final case class QualityStats(totalNulls: Long, duplicateRows: Long,
+    rows: Long = 0L)

@@ -25,6 +25,10 @@ object Profiler {
     case _                      => col(name).isNull
   }
 
+  /** Null-like cells of one column, as an aggregate. */
+  def nullCount(f: StructField): Column =
+    count(when(isNullLike(f.name, f.dataType), 1))
+
   def numericColumns(df: DataFrame): Seq[String] =
     df.schema.fields.collect {
       case f if f.dataType.isInstanceOf[NumericType] => f.name
@@ -158,14 +162,33 @@ object Profiler {
   def duplicateCountHashed(df: DataFrame): Long =
     duplicateCountHashed(df, df.columns.toSeq)
 
-  def duplicateCountHashed(df: DataFrame, cols: Seq[String]): Long =
+  def duplicateCountHashed(df: DataFrame, cols: Seq[String]): Long = {
+    val types = df.select(cols.map(col): _*).schema.fields.map(_.dataType)
+    val key = cols.zip(types).flatMap { case (c, t) => withNullFlag(col(c), t) }
     df.select(
-        xxhash64(lit(1) +: cols.map(col): _*).as("__h1"),
-        xxhash64(lit(2) +: cols.map(col): _*).as("__h2"))
+        xxhash64(lit(1) +: key: _*).as("__h1"),
+        xxhash64(lit(2) +: key: _*).as("__h2"))
       .groupBy(col("__h1"), col("__h2"))
       .agg(count(lit(1)).as("__cnt"))
       .agg(coalesce(sum(col("__cnt") - 1), lit(0L)))
       .head().getLong(0)
+  }
+
+  /** A value and its null flag, as digest inputs. xxhash64 skips nulls
+    * (top-level values, array elements and struct fields alike), so
+    * (null, 5) and (5, null), `[1]` and `[1, null]`, would hash alike;
+    * every value, nested ones included, goes into the digest with its
+    * null flag. */
+  private def withNullFlag(c: Column, dt: DataType): Seq[Column] = {
+    val v = dt match {
+      case ArrayType(et, _) =>
+        transform(c, x => struct(withNullFlag(x, et): _*))
+      case StructType(fs) =>
+        struct(fs.toSeq.flatMap(f => withNullFlag(c.getField(f.name), f.dataType)): _*)
+      case _ => c
+    }
+    Seq(c.isNull, v)
+  }
 
   /** KMV (k-minimum-values) distinct sketch per group — the MERGEABLE
     * distinct counter (Bar-Yossef et al. 2002; the theta-sketch
@@ -392,40 +415,53 @@ object Profiler {
     * list. Three jobs total regardless of column count — a stats agg for
     * all numeric columns, a fused count agg (outliers + nulls + parse
     * ratios), and the duplicate count — with the latter two submitted
-    * concurrently (both read only the pinned input). The input is pinned for the
-    * detector's lifetime so the three jobs scan the (possibly expensive —
-    * q_missions' dirt projection re-ran a 7-parser date chain per job in
-    * round 2) upstream plan exactly once.
+    * concurrently (both read only the pinned input). An input nobody has
+    * pinned is pinned for the detector's lifetime so the three jobs scan
+    * the (possibly expensive — q_missions' dirt projection re-ran a
+    * 7-parser date chain per job in round 2) upstream plan exactly once;
+    * an input the caller already pinned keeps its pin.
     *
     * `exact = false` is the 100 TB path: the duplicate count — the only
     * full-width shuffle in the detector — degrades to the HLL sketch
     * (`duplicateCountApprox`), making the whole detector Expand-free and
     * shuffle-light. Exact mode exists for oracle parity. */
   def detectMissions(df: DataFrame, zThreshold: Double = 3.0,
-      exact: Boolean = true, dupRsd: Double = 0.02): Seq[Mission] = {
-    val work = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try detectMissionsOn(work, zThreshold, exact, dupRsd)
-    finally work.unpersist(false)
+      exact: Boolean = true, dupRsd: Double = 0.02): Seq[Mission] =
+    missionsAndStats(df, zThreshold, exact, dupRsd)._1
+
+  /** [[detectMissions]] plus the input's [[QualityStats]], read off the
+    * detector's own jobs at no added job: job A also counts rows and
+    * already counts every column's nulls, job C is the duplicate count
+    * (the HLL estimate when `exact = false`). */
+  private[graft] def missionsAndStats(df: DataFrame, zThreshold: Double = 3.0,
+      exact: Boolean = true, dupRsd: Double = 0.02)
+      : (Seq[Mission], QualityStats) = {
+    val pin = df.storageLevel == StorageLevel.NONE
+    if (pin) df.persist(StorageLevel.MEMORY_AND_DISK)
+    try detectMissionsOn(df, zThreshold, exact, dupRsd)
+    finally if (pin) df.unpersist(false)
   }
 
   private def detectMissionsOn(df: DataFrame, zThreshold: Double,
-      exact: Boolean, dupRsd: Double): Seq[Mission] = {
+      exact: Boolean, dupRsd: Double): (Seq[Mission], QualityStats) = {
     val numCols = numericColumns(df)
     val strCols = stringColumns(df)
     val fields = df.schema.fields.toSeq
 
     // job A (materializes the cache): everything that does NOT depend on
     // the z-score stats rides in the SAME pass that computes them —
-    // mean+stddev_pop per numeric column, null counts, and the (expensive:
-    // 7-parser whitelist chain per string column) date-parse counts
+    // mean+stddev_pop per numeric column, null counts, the (expensive:
+    // 7-parser whitelist chain per string column) date-parse counts and
+    // the row count
     val statAggs = numCols.flatMap(c =>
       Seq(avg(col(c)).as(s"${c}__m"), stddev_pop(col(c)).as(s"${c}__s"))) ++
-      fields.map(f => count(when(isNullLike(f.name, f.dataType), 1)).as(s"${f.name}__null")) ++
+      fields.map(f => nullCount(f).as(s"${f.name}__null")) ++
       strCols.flatMap(c => Seq(
         count(when(lenientParseDate(col(c)).isNotNull, 1)).as(s"${c}__parsed"),
         // denominator includes nulls: reference iterates all cells and
         // str(nan) fails to parse (app.py:73-81, ratio at app.py:205,236)
-        count(lit(1)).as(s"${c}__tot")))
+        count(lit(1)).as(s"${c}__tot"))) :+
+      count(lit(1)).as("__rows")
     val a = df.agg(statAggs.head, statAggs.tail: _*).head()
     val models = numCols.zipWithIndex.map { case (c, i) =>
       val m = if (a.isNullAt(2 * i)) Double.NaN else a.getDouble(2 * i)
@@ -433,14 +469,13 @@ object Profiler {
       c -> ZScoreModel(c, m, s, zThreshold)
     }.toMap
     var i = 2 * numCols.length
-    val nulls = fields.flatMap { f =>
-      val n = a.getLong(i); i += 1
-      if (n > 0) Some(Mission.Nulls(f.name, n)) else None
-    }
+    val nullCounts = fields.map { f => val n = a.getLong(i); i += 1; f.name -> n }
+    val nulls = nullCounts.collect { case (c, n) if n > 0 => Mission.Nulls(c, n) }
     val dates = strCols.flatMap { c =>
       val parsed = a.getLong(i); val tot = a.getLong(i + 1); i += 2
       if (parsed > 0 && parsed < tot) Some(Mission.DateMixed(c, tot - parsed)) else None
     }
+    val rows = a.getLong(i)
 
     // jobs B and C both read only the cache pinned by job A and are
     // independent of each other — run them CONCURRENTLY so the cluster
@@ -476,15 +511,15 @@ object Profiler {
     // shuffle rows instead of the full column tuple); approx mode is the
     // HLL sketch — both read the cache, neither re-scans upstream.
     val dupsF = guarded {
-      val nDup = if (exact) duplicateCountHashed(df)
-        else duplicateCountApprox(df, dupRsd)
-      if (nDup > 0) Seq(Mission.Duplicates(nDup)) else Nil
+      if (exact) duplicateCountHashed(df) else duplicateCountApprox(df, dupRsd)
     }
 
     val outliers = join(outliersF)
-    val dups = join(dupsF)
+    val nDup = join(dupsF)
+    val dups = if (nDup > 0) Seq(Mission.Duplicates(nDup)) else Nil
 
-    outliers ++ nulls ++ dups ++ dates
+    (outliers ++ nulls ++ dups ++ dates,
+      QualityStats(nullCounts.map(_._2).sum, nDup, rows))
   }
 
   /** Missingness-pattern mining: one row per NULL-pattern across the

@@ -9,15 +9,21 @@ import graft.profile.Profiler
 /** Scoring / summary operators (SURVEY §2.4, Q1-Q3). */
 object Quality {
 
-  /** Total nulls across ALL columns (pandas `isnull().sum().sum()`,
-    * app.py:84-85) + full-row duplicate count, in two jobs. */
-  def stats(df: DataFrame): QualityStats = {
+  /** Row count and total nulls across ALL columns (pandas
+    * `isnull().sum().sum()`, app.py:84-85) in one aggregate. */
+  private def rowsAndNulls(df: DataFrame): (Long, Long) = {
     val fields = df.schema.fields.toSeq
-    val aggs = fields.map(f =>
-      count(when(Profiler.isNullLike(f.name, f.dataType), lit(1))).as(f.name))
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    val totalNulls = fields.indices.map(r.getLong).sum
-    QualityStats(totalNulls, Profiler.duplicateCount(df))
+    val r = df.agg(count(lit(1)), fields.map(Profiler.nullCount): _*).head()
+    (r.getLong(0), fields.indices.map(i => r.getLong(i + 1)).sum)
+  }
+
+  /** Total nulls, full-row duplicate count and row count, in two jobs.
+    * The duplicate count is the mission detector's own
+    * ([[Profiler.duplicateCountHashed]]), so these equal the stats the
+    * detector reports for the same frame. */
+  def stats(df: DataFrame): QualityStats = {
+    val (rows, nulls) = rowsAndNulls(df)
+    QualityStats(nulls, Profiler.duplicateCountHashed(df), rows)
   }
 
   /** Q1 — quality score (app.py:83-92):
@@ -34,7 +40,12 @@ object Quality {
     score(stats(before), stats(after))
 
   /** Q2 — insights (app.py:372-376). */
-  def insights(before: DataFrame, after: DataFrame): Insights =
-    Insights(before.count(), after.count(), after.columns.toSeq,
-      stats(after).totalNulls)
+  def insights(before: QualityStats, after: QualityStats,
+      columns: Seq[String]): Insights =
+    Insights(before.rows, after.rows, columns, after.totalNulls)
+
+  def insights(before: DataFrame, after: DataFrame): Insights = {
+    val (rows, nulls) = rowsAndNulls(after)
+    Insights(before.count(), rows, after.columns.toSeq, nulls)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.io.SampleData
 import graft.model.Mission
@@ -109,6 +110,61 @@ class ProfilerSpec extends SparkSpec {
       "rows 10,11 duplicate row 9")
     val catNulls = ms.collectFirst { case Mission.Nulls("category", n) => n }
     assert(catNulls.exists(_ > 0), "category has injected nulls")
+  }
+
+  test("P6 detectMissions keeps a caller's pin and leaves an unpinned " +
+      "input unpinned") {
+    val pinned = SampleData.load(spark).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val ms = Profiler.detectMissions(pinned)
+      assert(ms.nonEmpty)
+      assert(pinned.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "the caller's pin must survive the detector")
+    } finally pinned.unpersist(true)
+    val loose = SampleData.load(spark)
+    assert(Profiler.detectMissions(loose) == Profiler.detectMissions(pinned))
+    assert(loose.storageLevel == StorageLevel.NONE)
+  }
+
+  test("P6 the detector's stats equal the direct rows, nulls and " +
+      "duplicate counts") {
+    val df = SampleData.load(spark)
+    val (ms, c) = Profiler.missionsAndStats(df)
+    assert(c == graft.score.Quality.stats(df))
+    assert(c.rows == 200 && c.duplicateRows == Profiler.duplicateCount(df))
+    assert(c.totalNulls == ms.collect { case Mission.Nulls(_, n) => n }.sum)
+  }
+
+  test("P2 hashed duplicate count tells null positions apart") {
+    // xxhash64 skips nulls: without the null flags (null, 5) and (5, null)
+    // would share one digest
+    val df = Seq[(Option[Int], Option[Int])](
+      (None, Some(5)), (Some(5), None), (Some(5), None),
+      (None, None), (None, None)).toDF("a", "b")
+    assert(Profiler.duplicateCount(df) == 2)
+    assert(Profiler.duplicateCountHashed(df) == 2)
+    val strs = Seq[(Option[String], Option[String])](
+      (Some("x"), None), (None, Some("x"))).toDF("a", "b")
+    assert(Profiler.duplicateCountHashed(strs) == 0)
+
+    // nested nulls: xxhash64 also skips null array elements and struct
+    // fields, so [1] and [1, null], struct(null, 5) and struct(5, null)
+    // would hash alike
+    val nested = Seq[(Seq[Option[Int]], (Option[Int], Option[Int]))](
+      (Seq(Some(1)), (None, Some(5))),
+      (Seq(Some(1), None), (Some(5), None)),
+      (Seq(Some(1), None), (Some(5), None)),
+      (Seq(None, Some(1)), (Some(5), None)),
+      (Seq(), (None, None)),
+      (null, (None, None)),
+      (Seq(), null)).toDF("arr", "st")
+    assert(Profiler.duplicateCount(nested) == 1)
+    assert(Profiler.duplicateCountHashed(nested) == 1)
+    val deep = Seq[Seq[(Option[Int], Option[Int])]](
+      Seq((None, Some(2))), Seq((Some(2), None)), Seq((Some(2), None)))
+      .toDF("a")
+    assert(Profiler.duplicateCount(deep) == 1)
+    assert(Profiler.duplicateCountHashed(deep) == 1)
   }
 
   test("sample data defect structure is exact") {

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.storage.StorageLevel
+
 import graft.clean.CleaningAction._
 import graft.io.SampleData
 import graft.model.QualityStats
@@ -46,6 +52,121 @@ class QualitySpec extends SparkSpec {
     val ins = p1.insights
     assert(ins.rowsBefore == 200 && ins.rowsAfter == 198)
     p1.reset()
+  }
+
+  /** Spark jobs started while `body` runs. A marker job submitted after
+    * it proves the listener bus has delivered every earlier job start. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "jobsOf-marker"))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobsOf-marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val sessionActions = Seq(DropDuplicates(),
+    NullFillConstant("category"), OutlierReplaceMedian("price"),
+    NullImputeMedian("price"), DateAutoParse("date"))
+
+  /** The pipeline's score and insights equal the direct computation. */
+  private def assertMatchesDirect(p: CleaningPipeline): Unit = {
+    assert(p.qualityScore == Quality.score(p.orig, p.work))
+    assert(p.insights == Quality.insights(p.orig, p.work))
+  }
+
+  test("pipeline score and insights equal the direct computation, with " +
+      "and without missions, and after reset") {
+    // no missions: counts computed on demand
+    val cold = sessionActions.foldLeft(CleaningPipeline(SampleData.load(spark)))(
+      _ apply _)
+    assertMatchesDirect(cold)
+    assert(cold.reset().qualityScore == 50.0)
+    assertMatchesDirect(cold.reset())
+    cold.orig.unpersist(true)
+
+    // missions on every version: counts recorded by the detector
+    var p = CleaningPipeline(SampleData.load(spark))
+    p.missions
+    for (a <- sessionActions) { p = p(a); p.missions }
+    assert(jobsOf { p.qualityScore; p.insights } == 0,
+      "score and insights must reuse the counts of the missions pass")
+    assertMatchesDirect(p)
+    val r = p.reset()
+    assert(r.work eq r.orig)
+    assertMatchesDirect(r)
+    r.orig.unpersist(true)
+  }
+
+  test("pipeline pins exactly one version: the working one, kept " +
+      "through missions") {
+    var p = CleaningPipeline(SampleData.load(spark))
+    var versions = Vector(p.work)
+    def pinned = versions.distinct.filter(_.storageLevel != StorageLevel.NONE)
+    p.missions
+    assert(pinned == Vector(p.work))
+    for (a <- sessionActions) {
+      p = p(a)
+      versions :+= p.work
+      p.missions
+      assert(pinned.size == 1 && (pinned.head eq p.work),
+        s"after ${a.describe}: ${pinned.size} versions pinned")
+    }
+    val r = p.reset()
+    assert(pinned.size == 1 && (pinned.head eq r.orig))
+    r.orig.unpersist(true)
+  }
+
+  test("a frame the caller pinned keeps its pin through apply and reset") {
+    val df = SampleData.load(spark).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val p = CleaningPipeline(df)(DropDuplicates())
+      p.missions
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      val r = p.reset()
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(p.work.storageLevel == StorageLevel.NONE)
+      r(NullFillConstant("category")).reset()
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally df.unpersist(true)
+  }
+
+  test("derived versions are snapshots: removing the source after " +
+      "apply changes neither their data nor the score") {
+    val path = java.nio.file.Files.createTempDirectory("graft_snapshot")
+      .resolve("upload.parquet").toString
+    val sample = SampleData.load(spark)
+    sample.write.parquet(path)
+    val p0 = CleaningPipeline(spark.read.parquet(path))
+    p0.missions // records orig's stats while the source is there
+    val p1 = p0(DropDuplicates())
+    // removed behind Spark's back: a write through Spark would refresh
+    // every cache over the path
+    val src = new org.apache.hadoop.fs.Path(path)
+    assert(src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(src, true))
+    val p2 = p1(NullFillConstant("category"))
+    p2.missions
+    val ref = Seq(DropDuplicates(), NullFillConstant("category"))
+      .foldLeft(sample)((df, a) => a(df))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(p2.work) == rows(ref))
+    assert(p2.qualityScore == Quality.score(sample, ref))
+    assert(p2.insights == Quality.insights(sample, ref))
+    p2.work.unpersist(true)
   }
 
   test("lineage replays as a portable recipe on fresh data") {
