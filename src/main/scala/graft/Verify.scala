@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -44,7 +45,7 @@ object Verify {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           None
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           deleteTree(Paths.get(s"$outDir/$name"))
           Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
@@ -54,14 +55,12 @@ object Verify {
       // lineage cuts) live as the latter and clearCache alone leaks
       // them, which r3's judge measured as suite-context memory
       // pressure (92s in-suite vs 1.6s isolated on one face)
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
       try spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       failure
     }
-    Files.writeString(Paths.get(s"$outDir/errors.json"), failures
-      .map { case (n, msg) => s"${q(n)}: ${q(msg)}" }.mkString("{", ",", "}"))
     // RocksDB state-store parity (VERDICT r5 Next #7): re-run the five
     // core streaming faces under the production provider and require
     // byte-identical results vs the default-provider dump above, so a
@@ -77,9 +76,10 @@ object Verify {
       // and the A-ES weighted-sample max-set keyed state
       "q_stream_cms", "q_stream_wsample")
       .filter(n => only.isEmpty || only(n))
-    if (rocksFaces.nonEmpty) {
+    // a parity MISMATCH or ERROR is a failure like a face that throws
+    val parityFailures = if (rocksFaces.isEmpty) Nil else {
       val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = try Some(spark.conf.get(key)) catch { case _: Throwable => None }
+      val prev = try Some(spark.conf.get(key)) catch { case NonFatal(_) => None }
       spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
         ".state.RocksDBStateStoreProvider")
       val parity = rocksFaces.map { name =>
@@ -91,10 +91,10 @@ object Verify {
               .collect().map(_.toString).sorted.toSeq
             if (rocks == dumped) "match"
             else s"MISMATCH (rocksdb ${rocks.size} rows vs ${dumped.size})"
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             s"ERROR ${Option(e.getMessage).getOrElse(e.getClass.getName)}"
           }
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
+        try spark.catalog.clearCache() catch { case NonFatal(_) => () }
         name -> status
       }
       prev match {
@@ -108,7 +108,11 @@ object Verify {
           .replaceAll("[\\n\\r\\t]", " ") + "\""
       }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/rocksdb_parity.json"), pj)
+      parity.collect { case (n, st) if st != "match" => s"rocksdb:$n" -> st }
     }
+    val errors = failures ++ parityFailures
+    Files.writeString(Paths.get(s"$outDir/errors.json"), errors
+      .map { case (n, msg) => s"${q(n)}: ${q(msg)}" }.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -122,9 +126,9 @@ object Verify {
     // sequence and CI-style local runs set SPARK_GRAFT_CENSUS_GATE=1.
     if (sys.env.get("SPARK_GRAFT_CENSUS_GATE").contains("1"))
       graft.tools.CensusGate.main(Array("/root/testdata/sf0.001"))
-    if (failures.nonEmpty) {
-      System.err.println(s"[verify] ${failures.size} face(s) failed: " +
-        failures.map(_._1).mkString(", ") + s" (see $outDir/errors.json)")
+    if (errors.nonEmpty) {
+      System.err.println(s"[verify] ${errors.size} check(s) failed: " +
+        errors.map(_._1).mkString(", ") + s" (see $outDir/errors.json)")
       sys.exit(1)
     }
   }

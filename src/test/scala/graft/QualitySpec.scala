@@ -1,18 +1,26 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 import graft.clean.CleaningAction._
 import graft.io.SampleData
 import graft.model.QualityStats
 import graft.pipeline.CleaningPipeline
+import graft.profile.Profiler
 import graft.score.Quality
 
-class QualitySpec extends SparkSpec {
+class QualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("Q1 formula: 50 + 0.5*nulls_removed + 1.0*dups_removed, clamped") {
@@ -55,7 +63,8 @@ class QualitySpec extends SparkSpec {
   }
 
   /** Spark jobs started while `body` runs. A marker job submitted after
-    * it proves the listener bus has delivered every earlier job start. */
+    * it proves the listener bus has delivered every earlier event; it is
+    * an RDD job, so it runs no query of its own. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
@@ -71,10 +80,37 @@ class QualitySpec extends SparkSpec {
     try {
       body
       sc.setJobDescription("jobsOf-marker")
-      try spark.range(1).count() finally sc.setJobDescription(null)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
       jobs.get()
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** [[jobsOf]] plus the executed plan of every query `body` ran. */
+  private def plansOf(body: => Unit): (Int, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val n = jobsOf(body)
+      (n, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def shuffles(plan: SparkPlan): Seq[SparkPlan] =
+    collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }
+
+  /** The sample written as `files` parquet files of one row group each. */
+  private def upload(files: Int): String = {
+    val path = java.nio.file.Files.createTempDirectory("graft_upload")
+      .resolve("upload.parquet").toString
+    SampleData.load(spark).coalesce(files).write
+      .option("parquet.block.size", 1L << 30).parquet(path)
+    path
   }
 
   private val sessionActions = Seq(DropDuplicates(),
@@ -118,11 +154,14 @@ class QualitySpec extends SparkSpec {
     p.missions
     assert(pinned == Vector(p.work))
     for (a <- sessionActions) {
+      val base = p.work
       p = p(a)
       versions :+= p.work
+      assert(pinned.size == 1 && (pinned.head eq base),
+        s"after ${a.describe}: ${pinned.size} versions pinned, not the base")
       p.missions
       assert(pinned.size == 1 && (pinned.head eq p.work),
-        s"after ${a.describe}: ${pinned.size} versions pinned")
+        s"missions after ${a.describe}: ${pinned.size} versions pinned")
     }
     val r = p.reset()
     assert(pinned.size == 1 && (pinned.head eq r.orig))
@@ -145,28 +184,79 @@ class QualitySpec extends SparkSpec {
 
   test("derived versions are snapshots: removing the source after " +
       "apply changes neither their data nor the score") {
-    val path = java.nio.file.Files.createTempDirectory("graft_snapshot")
-      .resolve("upload.parquet").toString
     val sample = SampleData.load(spark)
-    sample.write.parquet(path)
-    val p0 = CleaningPipeline(spark.read.parquet(path))
-    p0.missions // records orig's stats while the source is there
-    val p1 = p0(DropDuplicates())
-    // removed behind Spark's back: a write through Spark would refresh
-    // every cache over the path
-    val src = new org.apache.hadoop.fs.Path(path)
-    assert(src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(src, true))
-    val p2 = p1(NullFillConstant("category"))
-    p2.missions
     val ref = Seq(DropDuplicates(), NullFillConstant("category"))
       .foldLeft(sample)((df, a) => a(df))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(rows(p2.work) == rows(ref))
-    assert(p2.qualityScore == Quality.score(sample, ref))
-    assert(p2.insights == Quality.insights(sample, ref))
-    p2.work.unpersist(true)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // one file plans as one partition (orig is coalesced), 3 files do not
+    for (files <- Seq(1, 3)) {
+      val path = upload(files)
+      val p0 = CleaningPipeline(spark.read.parquet(path))
+      p0.missions // records orig's stats while the source is there
+      val p1 = p0(DropDuplicates())
+      // removed behind Spark's back: a write through Spark would refresh
+      // every cache over the path
+      val src = new org.apache.hadoop.fs.Path(path)
+      assert(src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(src, true))
+      val p2 = p1(NullFillConstant("category"))
+      p2.missions
+      assert(rows(p2.work) == rows(ref), s"$files file(s)")
+      assert(p2.qualityScore == Quality.score(sample, ref), s"$files file(s)")
+      assert(p2.insights == Quality.insights(sample, ref), s"$files file(s)")
+      p2.work.unpersist(true)
+    }
+  }
+
+  test("a narrow apply runs no Spark job") {
+    val p = CleaningPipeline(SampleData.load(spark))
+    p.missions
+    assert(jobsOf { p(NullFillConstant("category"))(DateAutoParse("date")) } == 0)
+    p.reset().orig.unpersist(true)
+  }
+
+  test("a one-row-group upload plans as one partition: missions runs one " +
+      "job per aggregate and shuffles nothing") {
+    val p = CleaningPipeline(spark.read.parquet(upload(1)))
+    // fills orig's pin, as the session's first read does; on an unfilled
+    // pin AQE fills it with one more job of its own
+    Profiler.profile(p.work)
+    for (run <- Seq("first", "second")) {
+      val (jobs, plans) = plansOf(p.missions)
+      assert(jobs <= 3, s"$run: $jobs jobs")
+      assert(plans.size == 3 && plans.forall(shuffles(_).isEmpty),
+        s"$run:\n" + plans.mkString("\n"))
+    }
+    assert(shuffles(p.work.groupBy("category").count()
+      .queryExecution.executedPlan).isEmpty)
+    p.orig.unpersist(true)
+  }
+
+  test("an input of 3 files is pinned as given and still plans an " +
+      "Exchange") {
+    val df = spark.read.parquet(upload(3))
+    assert(df.rdd.getNumPartitions == 3)
+    val p = CleaningPipeline(df)
+    assert((p.orig eq df) && df.storageLevel != StorageLevel.NONE)
+    assert(shuffles(p.work.groupBy("category").count()
+      .queryExecution.executedPlan).nonEmpty)
+    df.unpersist(true)
+  }
+
+  test("a one-partition input is declared one partition only up to " +
+      "the size bound") {
+    // a range of n longs is 8n bytes by the planner's estimate
+    val rows = CleaningPipeline.OnePartitionMaxBytes / 8
+    val atBound = spark.range(0, rows, 1, 1).toDF("id")
+    val over = spark.range(0, rows + 1, 1, 1).toDF("id")
+    val p = CleaningPipeline(atBound)
+    assert(p.orig ne atBound)
+    assert(shuffles(p.work.groupBy("id").count()
+      .queryExecution.executedPlan).isEmpty)
+    p.orig.unpersist(true)
+    val q = CleaningPipeline(over)
+    assert((q.orig eq over) && over.storageLevel != StorageLevel.NONE)
+    over.unpersist(true)
   }
 
   test("lineage replays as a portable recipe on fresh data") {
