@@ -1104,87 +1104,45 @@ object Queries {
        |  round(CAST(n_rows AS DOUBLE) / CAST(t AS DOUBLE), 6) AS "share"
        |FROM w""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_null_patterns" -> (qNullPatterns _),
-    "q_corr_matrix" -> (qCorrMatrix _),
-    "q_benford" -> (qBenford _),
-    "q_quantile_bin" -> (qQuantileBin _),
-    "q_histogram" -> (qHistogram _),
-    "q_hist_drift" -> (qHistDrift _),
-    "q_ks_drift" -> (qKsDrift _),
-    "q_profile" -> (qProfile _),
-    "q_missions" -> (qMissions _),
-    "q_dup_count" -> (qDupCount _),
-    "q_outlier_detect" -> (qOutlierDetect _),
-    "q_outlier_remove" -> (qOutlierRemove _),
-    "q_outlier_replace_median" -> (qOutlierReplaceMedian _),
-    "q_outlier_replace_mean" -> (qOutlierReplaceMean _),
-    "q_outlier_clip" -> (qOutlierClip _),
-    "q_outlier_iqr" -> (qOutlierIqr _),
-    "q_null_drop" -> (qNullDrop _),
-    "q_impute_median" -> (qImputeMedian _),
-    "q_impute_mode" -> (qImputeMode _),
-    "q_fill_constant" -> (qFillConstant _),
-    "q_scale_minmax" -> (qScaleMinmax _),
-    "q_scale_zscore" -> (qScaleZscore _),
-    "q_scale_robust" -> (qScaleRobust _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_date_auto" -> (qDateAuto _),
-    "q_date_force_dmy" -> (qDateForceDmy _),
-    "q_date_force_ymd" -> (qDateForceYmd _),
-    "q_date_like" -> (qDateLike _),
-    "q_quality_score" -> (qQualityScore _),
-    "q_insights" -> (qInsights _),
-    "q_head" -> (qHead _),
-    "q_sample_defects" -> (qSampleDefects _),
-    "q_html_report" -> (qHtmlReport _),
-    "q_xlsx_roundtrip" -> (qXlsxRoundtrip _),
-    "q_csv_roundtrip" -> (qCsvRoundtrip _),
-    "q_json_roundtrip" -> (qJsonRoundtrip _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_fixed_width" -> (qFixedWidth _),
-    "q_xml_roundtrip" -> (qXmlRoundtrip _),
-    "q_partition_prune" -> (qPartitionPrune _))
-
-  val oracle: Map[String, String] = Map(
-    "q_null_patterns" -> qNullPatternsSql,
-    "q_corr_matrix" -> qCorrMatrixSql,
-    "q_benford" -> qBenfordSql,
-    "q_quantile_bin" -> qQuantileBinSql,
-    "q_histogram" -> qHistogramSql,
-    "q_hist_drift" -> qHistDriftSql,
-    "q_ks_drift" -> qKsDriftSql,
-    "q_profile" -> qProfileSql,
-    "q_missions" -> qMissionsSql,
-    "q_dup_count" -> qDupCountSql,
-    "q_outlier_detect" -> qOutlierDetectSql,
-    "q_outlier_remove" -> qOutlierRemoveSql,
-    "q_outlier_replace_median" -> qOutlierReplaceMedianSql,
-    "q_outlier_replace_mean" -> qOutlierReplaceMeanSql,
-    "q_outlier_clip" -> qOutlierClipSql,
-    "q_outlier_iqr" -> qOutlierIqrSql,
-    "q_null_drop" -> qNullDropSql,
-    "q_impute_median" -> qImputeMedianSql,
-    "q_impute_mode" -> qImputeModeSql,
-    "q_fill_constant" -> qFillConstantSql,
-    "q_scale_minmax" -> qScaleMinmaxSql,
-    "q_scale_zscore" -> qScaleZscoreSql,
-    "q_scale_robust" -> qScaleRobustSql,
-    "q_dedup_exact" -> qDedupExactSql,
-    "q_date_auto" -> qDateAutoSql,
-    "q_date_force_dmy" -> qDateForceDmySql,
-    "q_date_force_ymd" -> qDateForceYmdSql,
-    "q_date_like" -> qDateLikeSql,
-    "q_quality_score" -> qQualityScoreSql,
-    "q_insights" -> qInsightsSql,
-    "q_head" -> qHeadSql,
-    "q_sample_defects" -> qSampleDefectsSql,
-    "q_html_report" -> qHtmlReportSql,
-    "q_xlsx_roundtrip" -> qXlsxRoundtripSql,
-    "q_csv_roundtrip" -> qCsvRoundtripSql,
-    "q_json_roundtrip" -> qJsonRoundtripSql,
-    "q_orc_roundtrip" -> qOrcRoundtripSql,
-    "q_fixed_width" -> qFixedWidthSql,
-    "q_xml_roundtrip" -> qXmlRoundtripSql,
-    "q_partition_prune" -> qPartitionPruneSql)
+  val faces: Seq[Face] = Seq(
+    Face("q_null_patterns", qNullPatterns, qNullPatternsSql),
+    Face("q_corr_matrix", qCorrMatrix, qCorrMatrixSql),
+    Face("q_benford", qBenford, qBenfordSql),
+    Face("q_quantile_bin", qQuantileBin, qQuantileBinSql),
+    Face("q_histogram", qHistogram, qHistogramSql),
+    Face("q_hist_drift", qHistDrift, qHistDriftSql),
+    Face("q_ks_drift", qKsDrift, qKsDriftSql),
+    Face("q_profile", qProfile, qProfileSql),
+    Face("q_missions", qMissions, qMissionsSql),
+    Face("q_dup_count", qDupCount, qDupCountSql),
+    Face("q_outlier_detect", qOutlierDetect, qOutlierDetectSql),
+    Face("q_outlier_remove", qOutlierRemove, qOutlierRemoveSql),
+    Face("q_outlier_replace_median", qOutlierReplaceMedian, qOutlierReplaceMedianSql),
+    Face("q_outlier_replace_mean", qOutlierReplaceMean, qOutlierReplaceMeanSql),
+    Face("q_outlier_clip", qOutlierClip, qOutlierClipSql),
+    Face("q_outlier_iqr", qOutlierIqr, qOutlierIqrSql),
+    Face("q_null_drop", qNullDrop, qNullDropSql),
+    Face("q_impute_median", qImputeMedian, qImputeMedianSql),
+    Face("q_impute_mode", qImputeMode, qImputeModeSql),
+    Face("q_fill_constant", qFillConstant, qFillConstantSql),
+    Face("q_scale_minmax", qScaleMinmax, qScaleMinmaxSql),
+    Face("q_scale_zscore", qScaleZscore, qScaleZscoreSql),
+    Face("q_scale_robust", qScaleRobust, qScaleRobustSql),
+    Face("q_dedup_exact", qDedupExact, qDedupExactSql),
+    Face("q_date_auto", qDateAuto, qDateAutoSql),
+    Face("q_date_force_dmy", qDateForceDmy, qDateForceDmySql),
+    Face("q_date_force_ymd", qDateForceYmd, qDateForceYmdSql),
+    Face("q_date_like", qDateLike, qDateLikeSql),
+    Face("q_quality_score", qQualityScore, qQualityScoreSql),
+    Face("q_insights", qInsights, qInsightsSql),
+    Face("q_head", qHead, qHeadSql),
+    Face("q_sample_defects", qSampleDefects, qSampleDefectsSql),
+    Face("q_html_report", qHtmlReport, qHtmlReportSql),
+    Face("q_xlsx_roundtrip", qXlsxRoundtrip, qXlsxRoundtripSql),
+    Face("q_csv_roundtrip", qCsvRoundtrip, qCsvRoundtripSql),
+    Face("q_json_roundtrip", qJsonRoundtrip, qJsonRoundtripSql),
+    Face("q_orc_roundtrip", qOrcRoundtrip, qOrcRoundtripSql),
+    Face("q_fixed_width", qFixedWidth, qFixedWidthSql),
+    Face("q_xml_roundtrip", qXmlRoundtrip, qXmlRoundtripSql),
+    Face("q_partition_prune", qPartitionPrune, qPartitionPruneSql))
 }

@@ -8955,501 +8955,253 @@ object QueriesExt {
   }
 
   // ------------------------------------------------------------------
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pagerank" -> (qPageRank _),
-    "q_ppr_seeds" -> (qPprSeeds _),
-    "q_oov_rate" -> (qOovRate _),
-    "q_logistic_fit" -> (qLogisticFit _),
-    "q_quality_train" -> (qQualityTrain _),
-    "q_erasure" -> (qErasure _),
-    "q_chi_drift" -> (qChiDrift _),
-    "q_psi_drift" -> (qPsiDrift _),
-    "q_l_diversity" -> (qLDiversity _),
-    "q_dp_mean" -> (qDpMean _),
-    "q_mutual_info" -> (qMutualInfo _),
-    "q_linear_fit" -> (qLinearFit _),
-    "q_zipf_fit" -> (qZipfFit _),
-    "q_collocations" -> (qCollocations _),
-    "q_ppmi_embed" -> (qPpmiEmbed _),
-    "q_js_divergence" -> (qJsDivergence _),
-    "q_char_entropy" -> (qCharEntropy _),
-    "q_bootstrap_ci" -> (qBootstrapCi _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_degree_profile" -> (qDegreeProfile _),
-    "q_kcore" -> (qKcore _),
-    "q_label_prop" -> (qLabelProp _),
-    "q_triangles" -> (qTriangles _),
-    "q_lm_score" -> (qLmScore _),
-    "q_doremi_weights" -> (qDoremiWeights _),
-    "q_bigram_lm" -> (qBigramLm _),
-    "q_kn_bigram" -> (qKnBigram _),
-    "q_trigram_lm" -> (qTrigramLm _),
-    "q_ccnet_buckets" -> (qCcnetBuckets _),
-    "q_dsir_weights" -> (qDsirWeights _),
-    "q_repetition" -> (qRepetition _),
-    "q_intradoc_dedup" -> (qIntradocDedup _),
-    "q_gopher_filter" -> (qGopherFilter _),
-    "q_c4_filter" -> (qC4Filter _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_substring_dedup" -> (qSubstringDedup _),
-    "q_ngram_novelty" -> (qNgramNovelty _),
-    "q_quantile_panel" -> (qQuantilePanel _),
-    "q_quantile_panel_approx" -> (qQuantilePanelApprox _),
-    "q_rare_collapse" -> (qRareCollapse _),
-    "q_target_encode" -> (qTargetEncode _),
-    "q_split_leakage" -> (qSplitLeakage _),
-    "q_url_normalize" -> (qUrlNormalize _),
-    "q_url_dedup" -> (qUrlDedup _),
-    "q_domain_stats" -> (qDomainStats _),
-    "q_concentration" -> (qConcentration _),
-    "q_bloom_semi" -> (qBloomSemi _),
-    "q_constraints" -> (qConstraints _),
-    "q_fd_discovery" -> (qFdDiscovery _),
-    "q_ind_discovery" -> (qIndDiscovery _),
-    "q_ucc_discovery" -> (qUccDiscovery _),
-    "q_bucket_join" -> (qBucketJoin _),
-    "q_fuzzy_join" -> (qFuzzyJoin _),
-    "q_scd_merge" -> (qScdMerge _),
-    "q_join_advisor" -> (qJoinAdvisor _),
-    "q_time_gaps" -> (qTimeGaps _),
-    "q_key_skew" -> (qKeySkew _),
-    "q_tfidf" -> (qTfidf _),
-    "q_bm25" -> (qBm25 _),
-    "q_source_stats" -> (qSourceStats _),
-    "q_dataset_card" -> (qDatasetCard _),
-    "q_funnel" -> (qFunnel _),
-    "q_markov" -> (qMarkov _),
-    "q_conversion_lag" -> (qConversionLag _),
-    "q_conversion_lag_approx" -> (qConversionLagApprox _),
-    "q_ab_test" -> (qAbTest _),
-    "q_vocab" -> (qVocab _),
-    "q_bpe_train" -> (qBpeTrain _),
-    "q_wordpiece_train" -> (qWordPieceTrain _),
-    "q_unigram_tokenizer" -> (qUnigramTokenizer _),
-    "q_tokenizer_fertility" -> (qTokenizerFertility _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_kmv_distinct" -> (qKmvDistinct _),
-    "q_cms_counts" -> (qCmsCounts _),
-    "q_k_anonymity" -> (qKAnonymity _),
-    "q_dp_histogram" -> (qDpHistogram _),
-    "q_html_strip" -> (qHtmlStrip _),
-    "q_warc_ingest" -> (qWarcIngest _),
-    "q_moving_avg" -> (qMovingAvg _),
-    "q_exp_smooth" -> (qExpSmooth _),
-    "q_mad_outliers" -> (qMadOutliers _),
-    "q_lexical" -> (qLexical _),
-    "q_pack" -> (qPack _),
-    "q_chunk" -> (qChunk _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_survivors" -> (qDedupSurvivors _),
-    "q_survivor_policy" -> (qSurvivorPolicy _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_decontaminate_runs" -> (qDecontaminateRuns _),
-    "q_decontaminate_bloom" -> (qDecontaminateBloom _),
-    "q_corpus_diff" -> (qCorpusDiff _),
-    "q_zorder" -> (qZorder _),
-    "q_zprune" -> (qZPrune _),
-    "q_compaction" -> (qCompaction _),
-    "q_encode" -> (qEncode _),
-    "q_pack_ids" -> (qPackIds _),
-    "q_pack_efficiency" -> (qPackEfficiency _),
-    "q_cohort" -> (qCohort _),
-    "q_skew_join" -> (qSkewJoin _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_grid_join" -> (qGridJoin _),
-    "q_udtf_shingles" -> (qUdtfShingles _),
-    "q_stream_hourly" -> (qStreamHourly _),
-    "q_stream_append" -> (qStreamAppend _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_user_stats" -> (qStreamUserStats _),
-    "q_stream_ewma" -> (qStreamEwma _),
-    "q_stream_kmv" -> (qStreamKmv _),
-    "q_stream_cms" -> (qStreamCms _),
-    "q_stream_wsample" -> (qStreamWsample _),
-    "q_stream_topk" -> (qStreamTopk _),
-    "q_stream_sessions" -> (qStreamSessions _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_stream_left_join" -> (qStreamLeftJoin _),
-    "q_stream_enrich" -> (qStreamEnrich _),
-    "q_stream_drift" -> (qStreamDrift _),
-    "q_stream_chi_drift" -> (qStreamChiDrift _),
-    "q_stream_psi" -> (qStreamPsi _),
-    "q_stream_quality" -> (qStreamQuality _),
-    "q_window_panel" -> (qWindowPanel _),
-    "q_observe_metrics" -> (qObserveMetrics _),
-    "q_percentile_cont" -> (qPercentileCont _),
-    "q_semi_anti" -> (qSemiAnti _),
-    "q_running_total" -> (qRunningTotal _),
-    "q_sql_surface" -> (qSqlSurface _),
-    "q_recursive_spine" -> (qRecursiveSpine _),
-    "q_pricing_summary" -> (qPricingSummary _),
-    "q_salted_agg" -> (qSaltedAgg _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_nearest_join" -> (qNearestJoin _),
-    "q_cube" -> (qCube _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_pivot" -> (qPivot _),
-    "q_corpus_pipeline" -> (qCorpusPipeline _),
-    "q_prep_pipeline" -> (qPrepPipeline _),
-    "q_dedup_docs_exact" -> (qDedupDocsExact _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_edit_verify" -> (qEditVerify _),
-    "q_dup_attribution" -> (qDupAttribution _),
-    "q_minhash_calibration" -> (qMinhashCalibration _),
-    "q_incremental_dedup" -> (qIncrementalDedup _),
-    "q_stream_crawl_dedup" -> (qStreamCrawlDedup _),
-    "q_dedup_minhash_char" -> (qDedupMinhashChar _),
-    "q_jaccard_ngram" -> (qJaccardNgram _),
-    "q_substring_runs" -> (qSubstringRuns _),
-    "q_dup_coverage" -> (qDupCoverage _),
-    "q_substring_survivors" -> (qSubstringSurvivors _),
-    "q_span_removal" -> (qSpanRemoval _),
-    "q_incremental_substring" -> (qIncrementalSubstring _),
-    "q_jaccard_prefix" -> (qJaccardPrefix _),
-    "q_hash_split" -> (qHashSplit _),
-    "q_content_split" -> (qContentSplit _),
-    "q_score_percentile" -> (qScorePercentile _),
-    "q_mixture_sample" -> (qMixtureSample _),
-    "q_pii_redact" -> (qPiiRedact _),
-    "q_cc_detect" -> (qCcDetect _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_text_stats" -> (qTextStats _),
-    "q_lang_id" -> (qLangId _),
-    "q_lang_id_profile" -> (qLangIdProfile _),
-    "q_token_count" -> (qTokenCount _),
-    "q_token_count_merges" -> (qTokenCountMerges _),
-    "q_spearman" -> (qSpearman _),
-    "q_skew_kurtosis" -> (qSkewKurtosis _),
-    "q_trimmed_mean" -> (qTrimmedMean _),
-    "q_trimmed_mean_approx" -> (qTrimmedMeanApprox _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_cosine_topk" -> (qCosineTopk _),
-    "q_hard_negatives" -> (qHardNegatives _),
-    "q_contamination" -> (qContamination _),
-    "q_containment" -> (qContainmentPairs _),
-    "q_quality_classifier" -> (qQualityClassifier _),
-    "q_quality_ensemble" -> (qQualityEnsemble _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_ts_anomaly" -> (qTsAnomaly _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_temperature_mix" -> (qTemperatureMix _),
-    "q_shard_plan" -> (qShardPlan _),
-    "q_resample_ffill" -> (qResampleFfill _),
-    "q_curate_pipeline" -> (qCuratePipeline _),
-    "q_interpolate" -> (qInterpolate _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_quantize" -> (qQuantize _),
-    "q_pq_codes" -> (qPqCodes _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_ann_ivfpq" -> (qAnnIvfPq _),
-    "q_ann_ivfpq_rerank" -> (qAnnIvfPqRerank _),
-    "q_ivf_append" -> (qIvfAppend _),
-    "q_ann_ivfpq_residual" -> (qAnnIvfPqResidual _),
-    "q_embed_neardup" -> (qEmbedNearDup _),
-    "q_random_proj" -> (qRandomProj _),
-    "q_semantic_dedup" -> (qSemanticDedup _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_ann_lsh_multiprobe" -> (qAnnLshMultiprobe _),
-    "q_stream_ann" -> (qStreamAnn _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_ivf_auto" -> (qAnnIvfAuto _),
-    "q_kmeans_sampled" -> (qKmeansSampled _),
-    "q_ann_binary" -> (qAnnBinary _),
-    "q_ann_binary_asym" -> (qAnnBinaryAsym _),
-    "q_mmr_rerank" -> (qMmrRerank _),
-    "q_matryoshka" -> (qMatryoshka _),
-    "q_kmeans_fit" -> (qKmeansFit _),
-    "q_pca_project" -> (qPcaProject _),
-    "q_cluster_sample" -> (qClusterSample _),
-    "q_knn_graph" -> (qKnnGraph _),
-    "q_ann_graph" -> (qAnnGraph _),
-    "q_ann_graph_adaptive" -> (qAnnGraphAdaptive _),
-    "q_kcenter" -> (qKcenter _),
-    "q_embed_drift" -> (qEmbedDrift _),
-    "q_embed_outliers" -> (qEmbedOutliers _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_media_energy" -> (qMediaEnergy _),
-    "q_image_decode" -> (qImageDecode _),
-    "q_jpeg_decode" -> (qJpegDecode _),
-    "q_audio_decode" -> (qAudioDecode _),
-    "q_video_decode" -> (qVideoDecode _),
-    "q_shot_detect" -> (qShotDetect _),
-    "q_shot_keyframes" -> (qShotKeyframes _),
-    "q_gif_frame_dedup" -> (qGifFrameDedup _),
-    "q_image_resize" -> (qImageResize _),
-    "q_image_phash" -> (qImagePhash _),
-    "q_crossmodal_retrieval" -> (qCrossmodalRetrieval _),
-    "q_hybrid_rrf" -> (qHybridRrf _),
-    "q_rater_agreement" -> (qRaterAgreement _),
-    "q_calibration" -> (qCalibration _),
-    "q_fim_split" -> (qFimSplit _),
-    "q_span_corrupt" -> (qSpanCorrupt _),
-    "q_audio_resample" -> (qAudioResample _),
-    "q_audio_fingerprint" -> (qAudioFingerprint _),
-    "q_audio_neardup" -> (qAudioNeardup _),
-    "q_frame_dedup" -> (qFrameDedup _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_variant_json" -> (qVariantJson _),
-    "q_agg_pushdown" -> (qAggPushdown _),
-    "q_try_cast" -> (qTryCast _),
-    "q_listagg" -> (qListagg _),
-    "q_event_window" -> (qEventWindow _),
-    "q_sessionize" -> (qSessionize _),
-    "q_star_join" -> (qStarJoin _),
-    "q_topk_per_group" -> (qTopkPerGroup _),
-    "q_rollup" -> (qRollup _),
-    "q_set_ops" -> (qSetOps _),
-    "q_set_ops_all" -> (qSetOpsAll _),
-    "q_lateral" -> (qLateral _))
-
-  val oracle: Map[String, String] = Map(
-    "q_pagerank" -> qPageRankSql,
-    "q_ppr_seeds" -> qPprSeedsSql,
-    "q_oov_rate" -> qOovRateSql,
-    "q_logistic_fit" -> qLogisticFitSql,
-    "q_quality_train" -> qQualityTrainSql,
-    "q_erasure" -> qErasureSql,
-    "q_chi_drift" -> qChiDriftSql,
-    "q_psi_drift" -> qPsiDriftSql,
-    "q_stream_chi_drift" -> qChiDriftSql,
-    "q_stream_psi" -> qStreamPsiSql,
-    "q_stream_quality" -> qStreamQualitySql,
-    "q_window_panel" -> qWindowPanelSql,
-    "q_observe_metrics" -> qObserveMetricsSql,
-    "q_percentile_cont" -> qPercentileContSql,
-    "q_l_diversity" -> qLDiversitySql,
-    "q_dp_mean" -> qDpMeanSql,
-    "q_mutual_info" -> qMutualInfoSql,
-    "q_linear_fit" -> qLinearFitSql,
-    "q_zipf_fit" -> qZipfFitSql,
-    "q_collocations" -> qCollocationsSql,
-    "q_ppmi_embed" -> qPpmiEmbedSql,
-    "q_js_divergence" -> qJsDivergenceSql,
-    "q_char_entropy" -> qCharEntropySql,
-    "q_bootstrap_ci" -> qBootstrapCiSql,
-    "q_weighted_sample" -> qWeightedSampleSql,
-    "q_degree_profile" -> qDegreeProfileSql,
-    "q_kcore" -> qKcoreSql,
-    "q_label_prop" -> qLabelPropSql,
-    "q_triangles" -> qTrianglesSql,
-    "q_lm_score" -> qLmScoreSql,
-    "q_doremi_weights" -> qDoremiWeightsSql,
-    "q_bigram_lm" -> qBigramLmSql,
-    "q_kn_bigram" -> qKnBigramSql,
-    "q_trigram_lm" -> qTrigramLmSql,
-    "q_ccnet_buckets" -> qCcnetBucketsSql,
-    "q_dsir_weights" -> qDsirWeightsSql,
-    "q_repetition" -> qRepetitionSql,
-    "q_intradoc_dedup" -> qIntradocDedupSql,
-    "q_gopher_filter" -> qGopherFilterSql,
-    "q_c4_filter" -> qC4FilterSql,
-    "q_line_dedup" -> qLineDedupSql,
-    "q_substring_dedup" -> qSubstringDedupSql,
-    "q_ngram_novelty" -> qNgramNoveltySql,
-    "q_quantile_panel" -> qQuantilePanelSql,
-    "q_quantile_panel_approx" -> qQuantilePanelApproxSql,
-    "q_rare_collapse" -> qRareCollapseSql,
-    "q_target_encode" -> qTargetEncodeSql,
-    "q_heavy_hitters" -> qHeavyHittersSql,
-    "q_kmv_distinct" -> qKmvDistinctSql,
-    "q_cms_counts" -> qCmsCountsSql,
-    "q_split_leakage" -> qSplitLeakageSql,
-    "q_url_normalize" -> qUrlNormalizeSql,
-    "q_url_dedup" -> qUrlDedupSql,
-    "q_domain_stats" -> qDomainStatsSql,
-    "q_concentration" -> qConcentrationSql,
-    "q_k_anonymity" -> qKAnonymitySql,
-    "q_dp_histogram" -> qDpHistogramSql,
-    "q_html_strip" -> qHtmlStripSql,
-    "q_warc_ingest" -> qWarcIngestSql,
-    "q_bloom_semi" -> qBloomSemiSql,
-    "q_constraints" -> qConstraintsSql,
-    "q_fd_discovery" -> qFdDiscoverySql,
-    "q_ind_discovery" -> qIndDiscoverySql,
-    "q_ucc_discovery" -> qUccDiscoverySql,
-    "q_bucket_join" -> qBucketJoinSql,
-    "q_fuzzy_join" -> qFuzzyJoinSql,
-    "q_scd_merge" -> qScdMergeSql,
-    "q_join_advisor" -> qJoinAdvisorSql,
-    "q_time_gaps" -> qTimeGapsSql,
-    "q_key_skew" -> qKeySkewSql,
-    "q_tfidf" -> qTfidfSql,
-    "q_bm25" -> qBm25Sql,
-    "q_source_stats" -> qSourceStatsSql,
-    "q_dataset_card" -> qDatasetCardSql,
-    "q_funnel" -> qFunnelSql,
-    "q_markov" -> qMarkovSql,
-    "q_conversion_lag" -> qConversionLagSql,
-    "q_conversion_lag_approx" -> qConversionLagApproxSql,
-    "q_ab_test" -> qAbTestSql,
-    "q_vocab" -> qVocabSql,
-    "q_bpe_train" -> qBpeTrainSql,
-    "q_wordpiece_train" -> qWordPieceTrainSql,
-    "q_unigram_tokenizer" -> qUnigramTokenizerSql,
-    "q_tokenizer_fertility" -> qTokenizerFertilitySql,
-    "q_moving_avg" -> qMovingAvgSql,
-    "q_exp_smooth" -> qExpSmoothSql,
-    "q_mad_outliers" -> qMadOutliersSql,
-    "q_lexical" -> qLexicalSql,
-    "q_pack" -> qPackSql,
-    "q_chunk" -> qChunkSql,
-    "q_dedup_clusters" -> qDedupClustersSql,
-    "q_dedup_survivors" -> qDedupSurvivorsSql,
-    "q_survivor_policy" -> qSurvivorPolicySql,
-    "q_decontaminate" -> qDecontaminateSql,
-    "q_decontaminate_runs" -> qDecontaminateRunsSql,
-    "q_decontaminate_bloom" -> qDecontaminateSql,
-    "q_corpus_diff" -> qCorpusDiffSql,
-    "q_zorder" -> qZorderSql,
-    "q_zprune" -> qZPruneSql,
-    "q_compaction" -> qCompactionSql,
-    "q_encode" -> qEncodeSql,
-    "q_pack_ids" -> qPackIdsSql,
-    "q_pack_efficiency" -> qPackEfficiencySql,
-    "q_cohort" -> qCohortSql,
-    "q_skew_join" -> qSkewJoinSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_grid_join" -> qGridJoinSql,
-    "q_udtf_shingles" -> qUdtfShinglesSql,
-    "q_stream_hourly" -> qStreamHourlySql,
-    "q_stream_append" -> qStreamAppendSql,
-    "q_stream_dedup" -> qStreamDedupSql,
-    "q_stream_user_stats" -> qStreamUserStatsSql,
-    "q_stream_ewma" -> qStreamEwmaSql,
-    "q_stream_kmv" -> qStreamKmvSql,
-    "q_stream_cms" -> qStreamCmsSql,
-    "q_stream_wsample" -> qStreamWsampleSql,
-    "q_stream_topk" -> qStreamTopkSql,
-    "q_stream_sessions" -> qStreamSessionsSql,
-    "q_stream_join" -> qStreamJoinSql,
-    "q_stream_left_join" -> qStreamLeftJoinSql,
-    "q_stream_enrich" -> qStreamEnrichSql,
-    "q_stream_drift" -> qEmbedDriftSql,
-    "q_semi_anti" -> qSemiAntiSql,
-    "q_running_total" -> qRunningTotalSql,
-    "q_sql_surface" -> qSqlSurfaceSql,
-    "q_recursive_spine" -> qRecursiveSpineSql,
-    "q_pricing_summary" -> qPricingSummarySql,
-    "q_salted_agg" -> qSaltedAggSql,
-    "q_asof_join" -> qAsofJoinSql,
-    "q_nearest_join" -> qNearestJoinSql,
-    "q_cube" -> qCubeSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_pivot" -> qPivotSql,
-    "q_corpus_pipeline" -> qCorpusPipelineSql,
-    "q_prep_pipeline" -> qPrepPipelineSql,
-    "q_dedup_docs_exact" -> qDedupDocsExactSql,
-    "q_dedup_minhash" -> qDedupMinhashSql,
-    "q_edit_verify" -> qEditVerifySql,
-    "q_dup_attribution" -> qDupAttributionSql,
-    "q_minhash_calibration" -> qMinhashCalibrationSql,
-    "q_incremental_dedup" -> qIncrementalDedupSql,
-    "q_stream_crawl_dedup" -> qStreamCrawlDedupSql,
-    "q_dedup_minhash_char" -> qDedupMinhashCharSql,
-    "q_jaccard_ngram" -> qJaccardNgramSql,
-    "q_substring_runs" -> qSubstringRunsSql,
-    "q_dup_coverage" -> qDupCoverageSql,
-    "q_substring_survivors" -> qSubstringSurvivorsSql,
-    "q_span_removal" -> qSpanRemovalSql,
-    "q_incremental_substring" -> qIncrementalSubstringSql,
-    "q_jaccard_prefix" -> qJaccardPrefixSql,
-    "q_hash_split" -> qHashSplitSql,
-    "q_content_split" -> qContentSplitSql,
-    "q_score_percentile" -> qScorePercentileSql,
-    "q_mixture_sample" -> qMixtureSampleSql,
-    "q_pii_redact" -> qPiiRedactSql,
-    "q_cc_detect" -> qCcDetectSql,
-    "q_stratified_sample" -> qStratifiedSampleSql,
-    "q_dedup_simhash" -> qDedupSimhashSql,
-    "q_text_stats" -> qTextStatsSql,
-    "q_lang_id" -> qLangIdSql,
-    "q_lang_id_profile" -> qLangIdProfileSql,
-    "q_token_count" -> qTokenCountSql,
-    "q_token_count_merges" -> qTokenCountMergesSql,
-    "q_spearman" -> qSpearmanSql,
-    "q_skew_kurtosis" -> qSkewKurtosisSql,
-    "q_trimmed_mean" -> qTrimmedMeanSql,
-    "q_trimmed_mean_approx" -> qTrimmedMeanApproxSql,
-    "q_fingerprint" -> qFingerprintSql,
-    "q_cosine_topk" -> qCosineTopkSql,
-    "q_hard_negatives" -> qHardNegativesSql,
-    "q_contamination" -> qContaminationSql,
-    "q_containment" -> qContainmentPairsSql,
-    "q_quality_classifier" -> qQualityClassifierSql,
-    "q_quality_ensemble" -> qQualityEnsembleSql,
-    "q_token_budget" -> qTokenBudgetSql,
-    "q_ts_anomaly" -> qTsAnomalySql,
-    "q_cdc_apply" -> qCdcApplySql,
-    "q_temperature_mix" -> qTemperatureMixSql,
-    "q_shard_plan" -> qShardPlanSql,
-    "q_resample_ffill" -> qResampleFfillSql,
-    "q_curate_pipeline" -> qCuratePipelineSql,
-    "q_interpolate" -> qInterpolateSql,
-    "q_unpivot" -> qUnpivotSql,
-    "q_quantize" -> qQuantizeSql,
-    "q_pq_codes" -> qPqCodesSql,
-    "q_ann_pq" -> qAnnPqSql,
-    "q_ann_ivfpq" -> qAnnIvfPqSql,
-    "q_ann_ivfpq_rerank" -> qAnnIvfPqRerankSql,
-    "q_ivf_append" -> qIvfAppendSql,
-    "q_ann_ivfpq_residual" -> qAnnIvfPqResidualSql,
-    "q_embed_neardup" -> qEmbedNearDupSql,
-    "q_random_proj" -> qRandomProjSql,
-    "q_semantic_dedup" -> qSemanticDedupSql,
-    "q_ann_ivf" -> qAnnIvfSql,
-    "q_ann_ivf_auto" -> qAnnIvfAutoSql,
-    "q_kmeans_sampled" -> qKmeansSampledSql,
-    "q_ann_binary" -> qAnnBinarySql,
-    "q_ann_binary_asym" -> qAnnBinaryAsymSql,
-    "q_mmr_rerank" -> qMmrRerankSql,
-    "q_matryoshka" -> qMatryoshkaSql,
-    "q_ann_lsh" -> qAnnLshSql,
-    "q_ann_lsh_multiprobe" -> qAnnLshMultiprobeSql,
+  val faces: Seq[Face] = Seq(
+    Face("q_pagerank", qPageRank, qPageRankSql),
+    Face("q_ppr_seeds", qPprSeeds, qPprSeedsSql),
+    Face("q_oov_rate", qOovRate, qOovRateSql),
+    Face("q_logistic_fit", qLogisticFit, qLogisticFitSql),
+    Face("q_quality_train", qQualityTrain, qQualityTrainSql),
+    Face("q_erasure", qErasure, qErasureSql),
+    Face("q_chi_drift", qChiDrift, qChiDriftSql),
+    Face("q_psi_drift", qPsiDrift, qPsiDriftSql),
+    Face("q_l_diversity", qLDiversity, qLDiversitySql),
+    Face("q_dp_mean", qDpMean, qDpMeanSql),
+    Face("q_mutual_info", qMutualInfo, qMutualInfoSql),
+    Face("q_linear_fit", qLinearFit, qLinearFitSql),
+    Face("q_zipf_fit", qZipfFit, qZipfFitSql),
+    Face("q_collocations", qCollocations, qCollocationsSql),
+    Face("q_ppmi_embed", qPpmiEmbed, qPpmiEmbedSql),
+    Face("q_js_divergence", qJsDivergence, qJsDivergenceSql),
+    Face("q_char_entropy", qCharEntropy, qCharEntropySql),
+    Face("q_bootstrap_ci", qBootstrapCi, qBootstrapCiSql),
+    Face("q_weighted_sample", qWeightedSample, qWeightedSampleSql),
+    Face("q_degree_profile", qDegreeProfile, qDegreeProfileSql),
+    Face("q_kcore", qKcore, qKcoreSql),
+    Face("q_label_prop", qLabelProp, qLabelPropSql),
+    Face("q_triangles", qTriangles, qTrianglesSql),
+    Face("q_lm_score", qLmScore, qLmScoreSql),
+    Face("q_doremi_weights", qDoremiWeights, qDoremiWeightsSql),
+    Face("q_bigram_lm", qBigramLm, qBigramLmSql),
+    Face("q_kn_bigram", qKnBigram, qKnBigramSql),
+    Face("q_trigram_lm", qTrigramLm, qTrigramLmSql),
+    Face("q_ccnet_buckets", qCcnetBuckets, qCcnetBucketsSql),
+    Face("q_dsir_weights", qDsirWeights, qDsirWeightsSql),
+    Face("q_repetition", qRepetition, qRepetitionSql),
+    Face("q_intradoc_dedup", qIntradocDedup, qIntradocDedupSql),
+    Face("q_gopher_filter", qGopherFilter, qGopherFilterSql),
+    Face("q_c4_filter", qC4Filter, qC4FilterSql),
+    Face("q_line_dedup", qLineDedup, qLineDedupSql),
+    Face("q_substring_dedup", qSubstringDedup, qSubstringDedupSql),
+    Face("q_ngram_novelty", qNgramNovelty, qNgramNoveltySql),
+    Face("q_quantile_panel", qQuantilePanel, qQuantilePanelSql),
+    Face("q_quantile_panel_approx", qQuantilePanelApprox, qQuantilePanelApproxSql),
+    Face("q_rare_collapse", qRareCollapse, qRareCollapseSql),
+    Face("q_target_encode", qTargetEncode, qTargetEncodeSql),
+    Face("q_split_leakage", qSplitLeakage, qSplitLeakageSql),
+    Face("q_url_normalize", qUrlNormalize, qUrlNormalizeSql),
+    Face("q_url_dedup", qUrlDedup, qUrlDedupSql),
+    Face("q_domain_stats", qDomainStats, qDomainStatsSql),
+    Face("q_concentration", qConcentration, qConcentrationSql),
+    Face("q_bloom_semi", qBloomSemi, qBloomSemiSql),
+    Face("q_constraints", qConstraints, qConstraintsSql),
+    Face("q_fd_discovery", qFdDiscovery, qFdDiscoverySql),
+    Face("q_ind_discovery", qIndDiscovery, qIndDiscoverySql),
+    Face("q_ucc_discovery", qUccDiscovery, qUccDiscoverySql),
+    Face("q_bucket_join", qBucketJoin, qBucketJoinSql),
+    Face("q_fuzzy_join", qFuzzyJoin, qFuzzyJoinSql),
+    Face("q_scd_merge", qScdMerge, qScdMergeSql),
+    Face("q_join_advisor", qJoinAdvisor, qJoinAdvisorSql),
+    Face("q_time_gaps", qTimeGaps, qTimeGapsSql),
+    Face("q_key_skew", qKeySkew, qKeySkewSql),
+    Face("q_tfidf", qTfidf, qTfidfSql),
+    Face("q_bm25", qBm25, qBm25Sql),
+    Face("q_source_stats", qSourceStats, qSourceStatsSql),
+    Face("q_dataset_card", qDatasetCard, qDatasetCardSql),
+    Face("q_funnel", qFunnel, qFunnelSql),
+    Face("q_markov", qMarkov, qMarkovSql),
+    Face("q_conversion_lag", qConversionLag, qConversionLagSql),
+    Face("q_conversion_lag_approx", qConversionLagApprox, qConversionLagApproxSql),
+    Face("q_ab_test", qAbTest, qAbTestSql),
+    Face("q_vocab", qVocab, qVocabSql),
+    Face("q_bpe_train", qBpeTrain, qBpeTrainSql),
+    Face("q_wordpiece_train", qWordPieceTrain, qWordPieceTrainSql),
+    Face("q_unigram_tokenizer", qUnigramTokenizer, qUnigramTokenizerSql),
+    Face("q_tokenizer_fertility", qTokenizerFertility, qTokenizerFertilitySql),
+    Face("q_heavy_hitters", qHeavyHitters, qHeavyHittersSql),
+    Face("q_kmv_distinct", qKmvDistinct, qKmvDistinctSql),
+    Face("q_cms_counts", qCmsCounts, qCmsCountsSql),
+    Face("q_k_anonymity", qKAnonymity, qKAnonymitySql),
+    Face("q_dp_histogram", qDpHistogram, qDpHistogramSql),
+    Face("q_html_strip", qHtmlStrip, qHtmlStripSql),
+    Face("q_warc_ingest", qWarcIngest, qWarcIngestSql),
+    Face("q_moving_avg", qMovingAvg, qMovingAvgSql),
+    Face("q_exp_smooth", qExpSmooth, qExpSmoothSql),
+    Face("q_mad_outliers", qMadOutliers, qMadOutliersSql),
+    Face("q_lexical", qLexical, qLexicalSql),
+    Face("q_pack", qPack, qPackSql),
+    Face("q_chunk", qChunk, qChunkSql),
+    Face("q_dedup_clusters", qDedupClusters, qDedupClustersSql),
+    Face("q_dedup_survivors", qDedupSurvivors, qDedupSurvivorsSql),
+    Face("q_survivor_policy", qSurvivorPolicy, qSurvivorPolicySql),
+    Face("q_decontaminate", qDecontaminate, qDecontaminateSql),
+    Face("q_decontaminate_runs", qDecontaminateRuns, qDecontaminateRunsSql),
+    Face("q_decontaminate_bloom", qDecontaminateBloom, qDecontaminateSql),
+    Face("q_corpus_diff", qCorpusDiff, qCorpusDiffSql),
+    Face("q_zorder", qZorder, qZorderSql),
+    Face("q_zprune", qZPrune, qZPruneSql),
+    Face("q_compaction", qCompaction, qCompactionSql),
+    Face("q_encode", qEncode, qEncodeSql),
+    Face("q_pack_ids", qPackIds, qPackIdsSql),
+    Face("q_pack_efficiency", qPackEfficiency, qPackEfficiencySql),
+    Face("q_cohort", qCohort, qCohortSql),
+    Face("q_skew_join", qSkewJoin, qSkewJoinSql),
+    Face("q_range_join", qRangeJoin, qRangeJoinSql),
+    Face("q_grid_join", qGridJoin, qGridJoinSql),
+    Face("q_udtf_shingles", qUdtfShingles, qUdtfShinglesSql),
+    Face("q_stream_hourly", qStreamHourly, qStreamHourlySql),
+    Face("q_stream_append", qStreamAppend, qStreamAppendSql),
+    Face("q_stream_dedup", qStreamDedup, qStreamDedupSql),
+    Face("q_stream_user_stats", qStreamUserStats, qStreamUserStatsSql),
+    Face("q_stream_ewma", qStreamEwma, qStreamEwmaSql),
+    Face("q_stream_kmv", qStreamKmv, qStreamKmvSql),
+    Face("q_stream_cms", qStreamCms, qStreamCmsSql),
+    Face("q_stream_wsample", qStreamWsample, qStreamWsampleSql),
+    Face("q_stream_topk", qStreamTopk, qStreamTopkSql),
+    Face("q_stream_sessions", qStreamSessions, qStreamSessionsSql),
+    Face("q_stream_join", qStreamJoin, qStreamJoinSql),
+    Face("q_stream_left_join", qStreamLeftJoin, qStreamLeftJoinSql),
+    Face("q_stream_enrich", qStreamEnrich, qStreamEnrichSql),
+    Face("q_stream_drift", qStreamDrift, qEmbedDriftSql),
+    Face("q_stream_chi_drift", qStreamChiDrift, qChiDriftSql),
+    Face("q_stream_psi", qStreamPsi, qStreamPsiSql),
+    Face("q_stream_quality", qStreamQuality, qStreamQualitySql),
+    Face("q_window_panel", qWindowPanel, qWindowPanelSql),
+    Face("q_observe_metrics", qObserveMetrics, qObserveMetricsSql),
+    Face("q_percentile_cont", qPercentileCont, qPercentileContSql),
+    Face("q_semi_anti", qSemiAnti, qSemiAntiSql),
+    Face("q_running_total", qRunningTotal, qRunningTotalSql),
+    Face("q_sql_surface", qSqlSurface, qSqlSurfaceSql),
+    Face("q_recursive_spine", qRecursiveSpine, qRecursiveSpineSql),
+    Face("q_pricing_summary", qPricingSummary, qPricingSummarySql),
+    Face("q_salted_agg", qSaltedAgg, qSaltedAggSql),
+    Face("q_asof_join", qAsofJoin, qAsofJoinSql),
+    Face("q_nearest_join", qNearestJoin, qNearestJoinSql),
+    Face("q_cube", qCube, qCubeSql),
+    Face("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    Face("q_pivot", qPivot, qPivotSql),
+    Face("q_corpus_pipeline", qCorpusPipeline, qCorpusPipelineSql),
+    Face("q_prep_pipeline", qPrepPipeline, qPrepPipelineSql),
+    Face("q_dedup_docs_exact", qDedupDocsExact, qDedupDocsExactSql),
+    Face("q_dedup_minhash", qDedupMinhash, qDedupMinhashSql),
+    Face("q_edit_verify", qEditVerify, qEditVerifySql),
+    Face("q_dup_attribution", qDupAttribution, qDupAttributionSql),
+    Face("q_minhash_calibration", qMinhashCalibration, qMinhashCalibrationSql),
+    Face("q_incremental_dedup", qIncrementalDedup, qIncrementalDedupSql),
+    Face("q_stream_crawl_dedup", qStreamCrawlDedup, qStreamCrawlDedupSql),
+    Face("q_dedup_minhash_char", qDedupMinhashChar, qDedupMinhashCharSql),
+    Face("q_jaccard_ngram", qJaccardNgram, qJaccardNgramSql),
+    Face("q_substring_runs", qSubstringRuns, qSubstringRunsSql),
+    Face("q_dup_coverage", qDupCoverage, qDupCoverageSql),
+    Face("q_substring_survivors", qSubstringSurvivors, qSubstringSurvivorsSql),
+    Face("q_span_removal", qSpanRemoval, qSpanRemovalSql),
+    Face("q_incremental_substring", qIncrementalSubstring, qIncrementalSubstringSql),
+    Face("q_jaccard_prefix", qJaccardPrefix, qJaccardPrefixSql),
+    Face("q_hash_split", qHashSplit, qHashSplitSql),
+    Face("q_content_split", qContentSplit, qContentSplitSql),
+    Face("q_score_percentile", qScorePercentile, qScorePercentileSql),
+    Face("q_mixture_sample", qMixtureSample, qMixtureSampleSql),
+    Face("q_pii_redact", qPiiRedact, qPiiRedactSql),
+    Face("q_cc_detect", qCcDetect, qCcDetectSql),
+    Face("q_stratified_sample", qStratifiedSample, qStratifiedSampleSql),
+    Face("q_dedup_simhash", qDedupSimhash, qDedupSimhashSql),
+    Face("q_text_stats", qTextStats, qTextStatsSql),
+    Face("q_lang_id", qLangId, qLangIdSql),
+    Face("q_lang_id_profile", qLangIdProfile, qLangIdProfileSql),
+    Face("q_token_count", qTokenCount, qTokenCountSql),
+    Face("q_token_count_merges", qTokenCountMerges, qTokenCountMergesSql),
+    Face("q_spearman", qSpearman, qSpearmanSql),
+    Face("q_skew_kurtosis", qSkewKurtosis, qSkewKurtosisSql),
+    Face("q_trimmed_mean", qTrimmedMean, qTrimmedMeanSql),
+    Face("q_trimmed_mean_approx", qTrimmedMeanApprox, qTrimmedMeanApproxSql),
+    Face("q_fingerprint", qFingerprint, qFingerprintSql),
+    Face("q_cosine_topk", qCosineTopk, qCosineTopkSql),
+    Face("q_hard_negatives", qHardNegatives, qHardNegativesSql),
+    Face("q_contamination", qContamination, qContaminationSql),
+    Face("q_containment", qContainmentPairs, qContainmentPairsSql),
+    Face("q_quality_classifier", qQualityClassifier, qQualityClassifierSql),
+    Face("q_quality_ensemble", qQualityEnsemble, qQualityEnsembleSql),
+    Face("q_token_budget", qTokenBudget, qTokenBudgetSql),
+    Face("q_ts_anomaly", qTsAnomaly, qTsAnomalySql),
+    Face("q_cdc_apply", qCdcApply, qCdcApplySql),
+    Face("q_temperature_mix", qTemperatureMix, qTemperatureMixSql),
+    Face("q_shard_plan", qShardPlan, qShardPlanSql),
+    Face("q_resample_ffill", qResampleFfill, qResampleFfillSql),
+    Face("q_curate_pipeline", qCuratePipeline, qCuratePipelineSql),
+    Face("q_interpolate", qInterpolate, qInterpolateSql),
+    Face("q_unpivot", qUnpivot, qUnpivotSql),
+    Face("q_quantize", qQuantize, qQuantizeSql),
+    Face("q_pq_codes", qPqCodes, qPqCodesSql),
+    Face("q_ann_pq", qAnnPq, qAnnPqSql),
+    Face("q_ann_ivfpq", qAnnIvfPq, qAnnIvfPqSql),
+    Face("q_ann_ivfpq_rerank", qAnnIvfPqRerank, qAnnIvfPqRerankSql),
+    Face("q_ivf_append", qIvfAppend, qIvfAppendSql),
+    Face("q_ann_ivfpq_residual", qAnnIvfPqResidual, qAnnIvfPqResidualSql),
+    Face("q_embed_neardup", qEmbedNearDup, qEmbedNearDupSql),
+    Face("q_random_proj", qRandomProj, qRandomProjSql),
+    Face("q_semantic_dedup", qSemanticDedup, qSemanticDedupSql),
+    Face("q_ann_lsh", qAnnLsh, qAnnLshSql),
+    Face("q_ann_lsh_multiprobe", qAnnLshMultiprobe, qAnnLshMultiprobeSql),
     // chunking invariance IS the contract: the streaming face's oracle
     // is the batch multiprobe SQL verbatim
-    "q_stream_ann" -> qAnnLshMultiprobeSql,
-    "q_kmeans_fit" -> qKmeansFitSql,
-    "q_pca_project" -> qPcaProjectSql,
-    "q_cluster_sample" -> qClusterSampleSql,
-    "q_knn_graph" -> qKnnGraphSql,
-    "q_ann_graph" -> qAnnGraphSql,
-    "q_ann_graph_adaptive" -> qAnnGraphAdaptiveSql,
-    "q_kcenter" -> qKcenterSql,
-    "q_embed_drift" -> qEmbedDriftSql,
-    "q_embed_outliers" -> qEmbedOutliersSql,
-    "q_multimodal" -> qMultimodalSql,
-    "q_media_energy" -> qMediaEnergySql,
-    "q_image_decode" -> qImageDecodeSql,
-    "q_jpeg_decode" -> qJpegDecodeSql,
-    "q_audio_decode" -> qAudioDecodeSql,
-    "q_video_decode" -> qVideoDecodeSql,
-    "q_shot_detect" -> qShotDetectSql,
-    "q_shot_keyframes" -> qShotKeyframesSql,
-    "q_gif_frame_dedup" -> qGifFrameDedupSql,
-    "q_image_resize" -> qImageResizeSql,
-    "q_image_phash" -> qImagePhashSql,
-    "q_crossmodal_retrieval" -> qCrossmodalRetrievalSql,
-    "q_hybrid_rrf" -> qHybridRrfSql,
-    "q_rater_agreement" -> qRaterAgreementSql,
-    "q_calibration" -> qCalibrationSql,
-    "q_fim_split" -> qFimSplitSql,
-    "q_span_corrupt" -> qSpanCorruptSql,
-    "q_audio_resample" -> qAudioResampleSql,
-    "q_audio_fingerprint" -> qAudioFingerprintSql,
-    "q_audio_neardup" -> qAudioNeardupSql,
-    "q_frame_dedup" -> qFrameDedupSql,
-    "q_json_extract" -> qJsonExtractSql,
-    "q_variant_json" -> qVariantJsonSql,
-    "q_agg_pushdown" -> qAggPushdownSql,
-    "q_try_cast" -> qTryCastSql,
-    "q_listagg" -> qListaggSql,
-    "q_event_window" -> qEventWindowSql,
-    "q_sessionize" -> qSessionizeSql,
-    "q_star_join" -> qStarJoinSql,
-    "q_topk_per_group" -> qTopkPerGroupSql,
-    "q_rollup" -> qRollupSql,
-    "q_set_ops" -> qSetOpsSql,
-    "q_set_ops_all" -> qSetOpsAllSql,
-    "q_lateral" -> qLateralSql)
+    Face("q_stream_ann", qStreamAnn, qAnnLshMultiprobeSql),
+    Face("q_ann_ivf", qAnnIvf, qAnnIvfSql),
+    Face("q_ann_ivf_auto", qAnnIvfAuto, qAnnIvfAutoSql),
+    Face("q_kmeans_sampled", qKmeansSampled, qKmeansSampledSql),
+    Face("q_ann_binary", qAnnBinary, qAnnBinarySql),
+    Face("q_ann_binary_asym", qAnnBinaryAsym, qAnnBinaryAsymSql),
+    Face("q_mmr_rerank", qMmrRerank, qMmrRerankSql),
+    Face("q_matryoshka", qMatryoshka, qMatryoshkaSql),
+    Face("q_kmeans_fit", qKmeansFit, qKmeansFitSql),
+    Face("q_pca_project", qPcaProject, qPcaProjectSql),
+    Face("q_cluster_sample", qClusterSample, qClusterSampleSql),
+    Face("q_knn_graph", qKnnGraph, qKnnGraphSql),
+    Face("q_ann_graph", qAnnGraph, qAnnGraphSql),
+    Face("q_ann_graph_adaptive", qAnnGraphAdaptive, qAnnGraphAdaptiveSql),
+    Face("q_kcenter", qKcenter, qKcenterSql),
+    Face("q_embed_drift", qEmbedDrift, qEmbedDriftSql),
+    Face("q_embed_outliers", qEmbedOutliers, qEmbedOutliersSql),
+    Face("q_multimodal", qMultimodal, qMultimodalSql),
+    Face("q_media_energy", qMediaEnergy, qMediaEnergySql),
+    Face("q_image_decode", qImageDecode, qImageDecodeSql),
+    Face("q_jpeg_decode", qJpegDecode, qJpegDecodeSql),
+    Face("q_audio_decode", qAudioDecode, qAudioDecodeSql),
+    Face("q_video_decode", qVideoDecode, qVideoDecodeSql),
+    Face("q_shot_detect", qShotDetect, qShotDetectSql),
+    Face("q_shot_keyframes", qShotKeyframes, qShotKeyframesSql),
+    Face("q_gif_frame_dedup", qGifFrameDedup, qGifFrameDedupSql),
+    Face("q_image_resize", qImageResize, qImageResizeSql),
+    Face("q_image_phash", qImagePhash, qImagePhashSql),
+    Face("q_crossmodal_retrieval", qCrossmodalRetrieval, qCrossmodalRetrievalSql),
+    Face("q_hybrid_rrf", qHybridRrf, qHybridRrfSql),
+    Face("q_rater_agreement", qRaterAgreement, qRaterAgreementSql),
+    Face("q_calibration", qCalibration, qCalibrationSql),
+    Face("q_fim_split", qFimSplit, qFimSplitSql),
+    Face("q_span_corrupt", qSpanCorrupt, qSpanCorruptSql),
+    Face("q_audio_resample", qAudioResample, qAudioResampleSql),
+    Face("q_audio_fingerprint", qAudioFingerprint, qAudioFingerprintSql),
+    Face("q_audio_neardup", qAudioNeardup, qAudioNeardupSql),
+    Face("q_frame_dedup", qFrameDedup, qFrameDedupSql),
+    Face("q_json_extract", qJsonExtract, qJsonExtractSql),
+    Face("q_variant_json", qVariantJson, qVariantJsonSql),
+    Face("q_agg_pushdown", qAggPushdown, qAggPushdownSql),
+    Face("q_try_cast", qTryCast, qTryCastSql),
+    Face("q_listagg", qListagg, qListaggSql),
+    Face("q_event_window", qEventWindow, qEventWindowSql),
+    Face("q_sessionize", qSessionize, qSessionizeSql),
+    Face("q_star_join", qStarJoin, qStarJoinSql),
+    Face("q_topk_per_group", qTopkPerGroup, qTopkPerGroupSql),
+    Face("q_rollup", qRollup, qRollupSql),
+    Face("q_set_ops", qSetOps, qSetOpsSql),
+    Face("q_set_ops_all", qSetOpsAll, qSetOpsAllSql),
+    Face("q_lateral", qLateral, qLateralSql))
 }

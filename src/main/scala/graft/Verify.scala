@@ -22,18 +22,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in oracle SQL or an exception message would otherwise
-    // make any json.load of oracle_sql.json / errors.json fail.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     new java.io.File(outDir).mkdirs()
     // a face that throws is recorded (errors.json) and fails the run
     // once every face has run; its stale dump, if any, is removed
@@ -103,20 +91,14 @@ object Verify {
       }
       System.err.println("[verify] rocksdb parity: " +
         parity.map { case (n, st) => s"$n=$st" }.mkString(", "))
-      val pj = parity.map { case (n, st) =>
-        "\"" + n + "\":\"" + st.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replaceAll("[\\n\\r\\t]", " ") + "\""
-      }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/rocksdb_parity.json"), pj)
+      Files.writeString(Paths.get(s"$outDir/rocksdb_parity.json"),
+        jsonObject(parity))
       parity.collect { case (n, st) if st != "match" => s"rocksdb:$n" -> st }
     }
     val errors = failures ++ parityFailures
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errors
-      .map { case (n, msg) => s"${q(n)}: ${q(msg)}" }.mkString("{", ",", "}"))
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(
+      SparkEntry.oracleSql.filter { case (k, _) => only.isEmpty || only(k) }))
     spark.stop()
     // census-diff gate (VERDICT r14 Next #9), OPT-IN: the gate rebuilds
     // every face's plan in its own fixed-config session (sf0.001,
@@ -132,6 +114,24 @@ object Verify {
       sys.exit(1)
     }
   }
+
+  /** A JSON object of string pairs, in the pairs' order. Escapes
+    * backslash, quote and ALL control chars (<0x20): a tab or CR in
+    * oracle SQL or an exception message would otherwise make any
+    * json.load of the file fail. */
+  private[graft] def jsonObject(kv: Iterable[(String, String)]): String =
+    kv.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   private def deleteTree(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) Files.walk(p).sorted(java.util.Comparator.reverseOrder())

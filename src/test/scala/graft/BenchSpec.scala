@@ -334,4 +334,13 @@ class BenchSpec extends AnyFunSuite {
       Bench.spreadThresholdOf(Seq(1.45, 1.48, 1.50, 1.53))))
     assert(Bench.windowDegradedOf(1.0, 1.0, 1.0, 1.56))
   }
+
+  test("Verify's JSON encoder round-trips control chars, quotes and " +
+      "backslashes") {
+    val tricky = "a\u0001b\"c\\d\ne"
+    val json = Verify.jsonObject(Seq("k" -> tricky))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[java.util.Map[String, String]])
+    assert(back.get("k") == tricky)
+  }
 }

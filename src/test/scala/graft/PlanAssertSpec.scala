@@ -466,4 +466,19 @@ class PlanAssertSpec extends SparkSpec {
         s"an exchange carries WAV bytes: $line\n$plan")
     }
   }
+
+  test("the face registry: 286 faces, each name declared once, every " +
+      "face with an oracle, builders and oracles over the same keys") {
+    val names = SparkEntry.faces.map(_.name)
+    assert(names.size == 286)
+    assert(names.distinct.size == names.size)
+    assert(Queries.faces.map(_.name).toSet
+      .intersect(QueriesExt.faces.map(_.name).toSet).isEmpty)
+    SparkEntry.faces.foreach(f =>
+      assert(f.oracleSql.trim.nonEmpty, s"${f.name} has a blank oracle"))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    val twice = intercept[IllegalArgumentException](SparkEntry.distinctNames(
+      SparkEntry.faces.take(3) ++ SparkEntry.faces.take(1)))
+    assert(twice.getMessage.contains(SparkEntry.faces.head.name))
+  }
 }

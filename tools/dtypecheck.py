@@ -53,7 +53,8 @@ flags = 0
 for name, sql in sorted(oracle.items()):
     res_dir = f"{outdir}/{name}"
     if not os.path.isdir(res_dir):
-        print(f"SKIP {name}: no Spark result dir")
+        print(f"FAIL {name}: no Spark result dir")
+        flags += 1
         continue
     try:
         sp = con.execute(f"SELECT * FROM '{res_dir}/*.parquet'").df()

@@ -24,7 +24,8 @@ fails = 0
 for name, sql in sorted(oracle.items()):
     res_dir = f"{outdir}/{name}"
     if not os.path.isdir(res_dir):
-        print(f"SKIP {name}: no Spark result dir")
+        print(f"FAIL {name}: no Spark result dir")
+        fails += 1
         continue
     try:
         sp = con.execute(f"SELECT * FROM '{res_dir}/*.parquet'").df()
