@@ -1,4 +1,9 @@
 package graft
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line with the per-query medians and
@@ -16,15 +21,15 @@ import org.apache.spark.sql.SparkSession
   *     vs 1.64s isolated. We now also unpersist every registered RDD
   *     after each rep, which keeps in-suite times near isolated times.
   *
-  *  2. ADAPTIVE REPS under a global budget. Sub-`fastCut` queries get a
+  *  2. ADAPTIVE REPS under a global budget. Sub-`FastCut` queries get a
   *     single rep (a noise spike there adds little absolute error);
-  *     mid-range queries get median-of-`reps` (this VM shows 3-20x
+  *     mid-range queries get median-of-`Reps` (this VM shows 3-20x
   *     single-run spikes, so one sample of a 2-5s query is not a
-  *     trustworthy number); queries at/over `heavyCut` get min-of-2 (a
+  *     trustworthy number); queries at/over `HeavyCut` get min-of-2 (a
   *     spike cannot inflate a min, and a 3rd rep of an honestly-heavy
   *     query buys little for its cost); the 5 streaming faces get a
   *     single rep (their time is deterministic micro-batch machinery,
-  *     not noise). Once `budgetSec` of measured time is spent, all
+  *     not noise). Once `BudgetSec` of measured time is spent, all
   *     remaining queries degrade to a single rep — every query is
   *     always measured at least once, so the driver always gets a full
   *     per-query map and a parsed total.
@@ -41,9 +46,9 @@ object Bench {
     *    class (and a 0.75s-floor sentinel) reads quiet, which is
     *    exactly how r11's sixth official run confirmed q_kmv_distinct
     *    (0.253s floor, 0.526s fresh, suite_drift 1.29 "quiet"). A
-    *    micro mover (prev floor < microCut) is therefore judged
+    *    micro mover (prev floor < MicroCut) is therefore judged
     *    against max(drift, microDrift) where microDrift is the median
-    *    in-suite ratio of the WHOLE sub-`microCut` class — a mover
+    *    in-suite ratio of the WHOLE sub-`MicroCut` class — a mover
     *    can no longer be confirmed or cleared by the class-blind
     *    suite number alone.
     *  - ABSOLUTE-DELTA CONFIRM FLOOR: on this VM single-run job
@@ -296,11 +301,7 @@ object Bench {
     * now. Needs >= 3 members to be a population; fewer returns None
     * and the rule stays inert. */
   private[graft] def classFreshMedianOf(ratios: Seq[Double]): Option[Double] =
-    if (ratios.size < 3) None
-    else {
-      val s = ratios.sorted
-      Some(math.round(s(s.size / 2) * 100) / 100.0)
-    }
+    if (ratios.size < 3) None else median2(ratios)
 
   /** Class-fresh clearing (VERDICT r14 Next #3a): a breadth probe at
     * <= 1.5x the FRESH sibling-class median clears on that evidence —
@@ -340,69 +341,69 @@ object Bench {
       math.max(1.55, math.round(p75 * 1.10 * 100) / 100.0)
     }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val fastCut = sys.env.getOrElse("SPARK_GRAFT_BENCH_FAST_SEC", "1.0").toDouble
-    val heavyCut = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_SEC", "8.0").toDouble
-    // r7 post-mortem: the closing run hit the 540s budget (628s wall),
-    // degraded reps, and rebuilt several floors from in-suite noise
-    // spikes. The driver's wall cap is ~20 min; 900s leaves headroom
-    // for JVM startup + the confirm pass while restoring full reps.
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "900").toDouble
-    // class-guard knobs (VERDICT r11 Next #2; rationale on verdictOf):
-    // microCut separates the sub-second class (fixed-overhead-dominated)
-    // from cost-dominated queries; absDeltaSec is the confirm floor —
-    // 0.35s sits just above the ±0.3s single-run job-overhead band
-    // measured across the committed rehearsals (spreads in
-    // bench_detail.json show sub-second queries swinging that much on
-    // quiet windows).
-    val microCut =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MICRO_SEC", "1.0").toDouble
-    val absDeltaSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ABS_DELTA_SEC", "0.35").toDouble
-    // r9 post-mortem (VERDICT r9 Next #1b): the driver window ran ~2x
-    // slow, first-reps alone consumed the 900s budget, and 106 of 136
-    // raw movers went unadjudicated — yet all still counted as
-    // "floor_regressions" on the contract line. Two separate guards:
-    //  - repCutSec (0.6x budget): past it, extra reps stop, so even a
-    //    2x-slow window finishes first-reps with adjudication headroom;
-    //  - wallGuardSec: a HARD stop on all measurement. Past it the
-    //    remaining queries are recorded as `skipped` (not errors) and
-    //    the contract line is emitted with whatever was measured —
-    //    rc=124 (the r3 no-number failure) cannot recur UNLESS a single
-    //    query hangs between wall-guard checks. r13 closes that last
-    //    hole (ADVICE r10 #4, previously accepted): every measured rep
-    //    runs under its own JOB GROUP with a daemon-timer watchdog that
-    //    cancels the group after queryTimeoutSec — the cancelled write
-    //    throws, the rep records as a failure (plus the query lands in
-    //    `query_timeouts` on the detail line), and the suite moves on.
-    //    interruptOnCancel stays FALSE: Spark's kill flag is checked at
-    //    row boundaries, which unwedges every data-shaped hang, while
-    //    thread interrupts can corrupt Parquet/Netty IO state — the
-    //    trade documented when this was an accepted risk. Residual: a
-    //    hang on the DRIVER thread inside plan analysis (never observed
-    //    across 13 rounds), and streaming faces whose microbatch
-    //    threads don't inherit the job group (their triggers are
-    //    deterministic machinery, the class least likely to wedge).
-    val repCutSec = budgetSec * 0.6
-    val repSoftCutSec = budgetSec * 0.45
-    val wallGuardSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_WALL_SEC", "1000").toDouble
-    // generous 10x+ over the heaviest in-suite floor (~12s at sf0.1):
-    // purely a hang-breaker, never a perf judgment
-    val queryTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_SEC", "180").toDouble
-    // r8 A/B (bench_ab_r8.json): 1000 beats 5000 at local[32] — 12%
-    // faster suite, 0.9 GB less residual heap, q_triangles 8.6 vs 11.9s
-    // in-suite — while still avoiding the r6 100-entry thrash
-    // (q_incremental_dedup holds 1.12s). Retained generated classes are
-    // HEAP residency that shrinks the unified execution-memory share,
-    // and at 32 concurrent tasks the heaviest shuffles spill first.
-    // .toInt validates eagerly: a non-numeric env value must fail fast
-    // here, not produce invalid JSON in bench_detail.json downstream
-    val cgCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "1000").toInt
+  private[graft] val Reps = 3
+  private val FastCut = 1.0
+  private val HeavyCut = 8.0
+  // r7 post-mortem: the closing run hit the 540s budget (628s wall),
+  // degraded reps, and rebuilt several floors from in-suite noise
+  // spikes. The driver's wall cap is ~20 min; 900s leaves headroom
+  // for JVM startup + the confirm pass while restoring full reps.
+  private val BudgetSec = 900.0
+  // class-guard constants (VERDICT r11 Next #2; rationale on verdictOf):
+  // MicroCut separates the sub-second class (fixed-overhead-dominated)
+  // from cost-dominated queries; AbsDeltaSec is the confirm floor —
+  // 0.35s sits just above the ±0.3s single-run job-overhead band
+  // measured across the committed rehearsals (spreads in
+  // bench_detail.json show sub-second queries swinging that much on
+  // quiet windows).
+  private val MicroCut = 1.0
+  private val AbsDeltaSec = 0.35
+  // r9 post-mortem (VERDICT r9 Next #1b): the driver window ran ~2x
+  // slow, first-reps alone consumed the 900s budget, and 106 of 136
+  // raw movers went unadjudicated — yet all still counted as
+  // "floor_regressions" on the contract line. Two separate guards:
+  //  - RepCutSec (0.6x budget): past it, extra reps stop, so even a
+  //    2x-slow window finishes first-reps with adjudication headroom;
+  //  - WallGuardSec: a HARD stop on all measurement. Past it the
+  //    remaining queries are recorded as `skipped` (not errors) and
+  //    the contract line is emitted with whatever was measured —
+  //    rc=124 (the r3 no-number failure) cannot recur UNLESS a single
+  //    query hangs between wall-guard checks. r13 closes that last
+  //    hole (ADVICE r10 #4, previously accepted): every measured rep
+  //    runs under its own JOB GROUP with a daemon-timer watchdog that
+  //    cancels the group after QueryTimeoutSec — the cancelled write
+  //    throws, the rep records as a failure (plus the query lands in
+  //    `query_timeouts` on the detail line), and the suite moves on.
+  //    interruptOnCancel stays FALSE: Spark's kill flag is checked at
+  //    row boundaries, which unwedges every data-shaped hang, while
+  //    thread interrupts can corrupt Parquet/Netty IO state — the
+  //    trade documented when this was an accepted risk. Residual: a
+  //    hang on the DRIVER thread inside plan analysis (never observed
+  //    across 13 rounds), and streaming faces whose microbatch
+  //    threads don't inherit the job group (their triggers are
+  //    deterministic machinery, the class least likely to wedge).
+  private val RepCutSec = BudgetSec * 0.6
+  private val RepSoftCutSec = BudgetSec * 0.45
+  private val WallGuardSec = 1000.0
+  // generous 10x+ over the heaviest in-suite floor (~12s at sf0.1):
+  // purely a hang-breaker, never a perf judgment
+  private val QueryTimeoutSec = 180.0
+  // r8 A/B (bench_ab_r8.json): 1000 beats 5000 at local[32] — 12%
+  // faster suite, 0.9 GB less residual heap, q_triangles 8.6 vs 11.9s
+  // in-suite — while still avoiding the r6 100-entry thrash
+  // (q_incremental_dedup holds 1.12s). Retained generated classes are
+  // HEAP residency that shrinks the unified execution-memory share,
+  // and at 32 concurrent tasks the heaviest shuffles spill first.
+  private val CodegenCache = 1000
+  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+  private def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+  // upper median rounded to 2 decimals
+  private def median2(xs: Seq[Double]): Option[Double] =
+    if (xs.isEmpty) None else { val s = xs.sorted; Some(r2(s(s.size / 2))) }
+
+  /** Bench's session, shared with tools.PerfProbe. The warm-up query
+    * keeps session startup (~3s of noise) out of the first rep. */
+  private[graft] def session(sfDir: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -412,329 +413,207 @@ object Bench {
       // evicted and it re-pays ~2s Janino + ~4s JIT per run — the r6
       // "5.9x floor mover" was exactly this. A long-lived production
       // session keeps its compiled plans; the bench session should too.
-      .config("spark.sql.codegen.cache.maxEntries", cgCache)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCache)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM/codegen/scan path once so the first measured query
-    // doesn't absorb session startup (it was costing ~3s of noise)
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => () }
-    val benchT0 = System.nanoTime()
-    def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
-    // release SQL cache AND persistent RDD blocks (localCheckpoints are
-    // the latter) so later queries aren't measured under memory pressure
-    def cleanup(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
+    spark
+  }
+
+  /** One rep of face `name` (also tools.PerfProbe's): `measure` times
+    * the noop-sink write, then the SQL cache AND persistent RDD blocks
+    * (localCheckpoints are the latter) are released so later queries
+    * aren't measured under memory pressure. */
+  private[graft] def rep(spark: SparkSession, sfDir: String, name: String)(
+      measure: (=> Unit) => Option[Double]): Option[Double] = {
+    val fn = SparkEntry.queries(name)
+    // noop write forces evaluation of EVERY output column —
+    // count() would let Catalyst prune the projections under test
+    val dt = measure {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     }
-    // per-rep hang-breaker (rationale at queryTimeoutSec): one measured
-    // rep = one job group + one daemon-timer cancellation
-    var timeoutSet = Set.empty[String]
-    val watchdogTimer = new java.util.Timer("bench-watchdog", true)
-    def measuredRep(name: String)(body: => Unit): Option[Double] = {
-      val group = s"bench-$name-${System.nanoTime()}"
-      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = false)
-      @volatile var fired = false
-      val task = new java.util.TimerTask {
-        def run(): Unit = {
-          fired = true
-          try spark.sparkContext.cancelJobGroup(group)
-          catch { case _: Throwable => () }
-        }
-      }
-      watchdogTimer.schedule(task, (queryTimeoutSec * 1000).toLong)
-      val t0 = System.nanoTime()
-      val r =
-        try { body; Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable =>
-          // attribution needs BOTH signals (ADVICE r13): a rep that
-          // throws for an unrelated reason just as the timer fires
-          // would otherwise be misrecorded as a timeout; a genuine
-          // cancellation cannot surface before the timeout elapsed
-          if (fired && (System.nanoTime() - t0) / 1e9 >= queryTimeoutSec)
-            timeoutSet += name
-          None
-        }
-      task.cancel()
-      try spark.sparkContext.clearJobGroup() catch { case _: Throwable => () }
-      r
-    }
-    // Floors are only comparable at the same scale factor AND cpu
-    // count: the OFFICIAL per-round bench runs at sf0.1 / local[32]
-    // (BENCH_r07.json records cpus:32) — that run owns
-    // bench_floor.json; any other sf or cpu count (dev smokes at
-    // sf0.001/sf0.01, probes without SPARK_GRAFT_CPUS exported) keeps
-    // its own baseline in bench_floor_dev.json so it can neither
-    // pollute nor clobber the official one. (Round-8 incident: an A/B
-    // pair at the local[4] default silently rewrote local[32] floors —
-    // q_triangles costs ~18s at 4 threads vs ~6s at 32, so a cpu
-    // mismatch fabricates 3x "regressions" and buries real ones.) The
-    // file records sf+cpus and a mismatch skips comparison and write.
-    // Read BEFORE the measurement loop since the GC-before-heavy
-    // policy below keys off the previous round's floors.
-    val official = new java.io.File(sfDir).getName == "sf0.1" && cpus == "32"
-    val floorPath = java.nio.file.Paths.get(
-      if (official) "bench_floor.json" else "bench_floor_dev.json")
-    val prevFloors: Map[String, Double] = {
-      try {
-        if (java.nio.file.Files.exists(floorPath)) {
-          val txt = java.nio.file.Files.readString(floorPath)
-          val prevSf = "\"__sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1))
-          // files written before __cpus existed are official (32)
-          val prevCpus = "\"__cpus\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1)).getOrElse(if (official) cpus else "32")
-          if (!prevSf.contains(sfDir) || prevCpus != cpus)
-            Map.empty[String, Double]
-          else
-            // tiny flat {"name":sec,...} parser — no JSON lib on classpath
-            "\"(q_[^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(txt)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        } else Map.empty[String, Double]
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    }
-    // Previous round's committed bench_detail.json, trusted only at the
-    // same sf AND cpu count (dev smokes write the same file; the floors'
-    // round-8 cpu-mismatch incident applies here too — a "cpus" field is
-    // written from r11 on, and its absence is accepted as official 32
-    // exactly like the floor file's __cpus back-compat rule).
-    val prevDetail: Option[String] = {
-      try {
-        val p = java.nio.file.Paths.get("bench_detail.json")
-        if (!java.nio.file.Files.exists(p)) None
-        else {
-          val txt = java.nio.file.Files.readString(p)
-          val sfOk = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .exists(_.group(1) == sfDir)
-          val cpuOk = "\"cpus\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1) == cpus).getOrElse(cpus == "32")
-          if (sfOk && cpuOk) Some(txt) else None
-        }
-      } catch { case _: Throwable => None }
-    }
-    // GC-BEFORE-HEAVY keying, part 2 (VERDICT r10 Next #3): floor >= 3s
-    // alone missed q_jaccard_prefix — floor 1.96s but in-suite 7.5x vs
-    // isolated 1.4x, exactly the reclaimable-garbage signature the GC
-    // was shown to remove for q_triangles. The previous round's OBSERVED
-    // spread (max/min over reps) is direct evidence of suite-context
-    // noise on that query, so spread >= 3.0 keys the GC too (22 queries
-    // at the r10 detail — a handful of collections, not a policy shift).
-    val prevSpreads: Map[String, Double] = prevDetail.flatMap { txt =>
-      "\"spreads\":\\{([^}]*)\\}".r.findFirstMatchIn(txt).map { m =>
-        "\"(q_[^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(m.group(1))
-          .map(x => x.group(1) -> x.group(2).toDouble).toMap
-      }
-    }.getOrElse(Map.empty)
-    // consecutive degraded-window closes carried across rounds for the
-    // red-state contract (ADVICE r10 #1). Persisted in the FLOOR file,
-    // not bench_detail.json: the detail file is overwritten by every
-    // dev smoke at any sf, so a mid-round dev run would silently reset
-    // the streak; the floor file is already sf/cpus-gated and only the
-    // matching-configuration run rewrites it. 0 when absent (pre-r11).
-    val prevDegradedStreak: Int = {
-      try {
-        if (java.nio.file.Files.exists(floorPath)) {
-          val txt = java.nio.file.Files.readString(floorPath)
-          val prevSf = "\"__sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1))
-          val prevCpus = "\"__cpus\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1)).getOrElse(if (official) cpus else "32")
-          if (!prevSf.contains(sfDir) || prevCpus != cpus) 0
-          else "\"__degraded_streak\":([0-9]+)".r.findFirstMatchIn(txt)
-            .map(_.group(1).toInt).getOrElse(0)
-        } else 0
-      } catch { case _: Throwable => 0 }
-    }
-    // carried suspect_query list + clean-window spread history, both
-    // sf/cpus-gated exactly like the streak (same floor-file owner
-    // rule). Absent keys (pre-r15 files) read empty.
-    def floorFileSeq(key: String, itemRe: String): Seq[String] = {
-      try {
-        if (!java.nio.file.Files.exists(floorPath)) Nil
-        else {
-          val txt = java.nio.file.Files.readString(floorPath)
-          val prevSf = "\"__sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1))
-          val prevCpus = "\"__cpus\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1)).getOrElse(if (official) cpus else "32")
-          if (!prevSf.contains(sfDir) || prevCpus != cpus) Nil
-          else ("\"" + key + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt)
-            .map(m => itemRe.r.findAllMatchIn(m.group(1))
-              .map(_.group(1)).toSeq)
-            .getOrElse(Nil)
-        }
-      } catch { case _: Throwable => Nil }
-    }
-    val prevSuspects: Seq[String] =
-      floorFileSeq("__suspect", "\"(q_[^\"]+)\"").distinct
-    val prevSpreadHist: Seq[Double] =
-      floorFileSeq("__spread_hist", "([0-9.]+)").flatMap(s =>
-        try Some(s.toDouble) catch { case _: Throwable => None })
-    var failures = List.empty[String]
-    var flaky = List.empty[(String, Int)] // partial rep failures, kept visible
-    var budgetHit = false  // measured time passed budgetSec
-    var repCutHit = false  // extra reps stopped at 0.6x budget (ADVICE r10 #4)
-    var wallHit = false
-    var skipped = List.empty[String] // wall-guard casualties, NOT errors
-    // per-query (reps_used, max/min spread): this VM shows 3-40x
-    // single-run noise spikes even on quiet runs (r4: q_rollup 43s
-    // in-suite vs 0.97s isolated), so the artifact itself must say how
-    // trustworthy each number is — spread ~1 means believe it, spread
-    // >> 1 means the median/min absorbed a spike
-    var repsUsed = Map.empty[String, Int]
-    var spreads = Map.empty[String, Double]
-    var perQueryTimes = Map.empty[String, List[Double]]
-    // floor basis: IN-SUITE reps only (composeFloors part 1) — probe
-    // reps still join perQueryTimes for reps_used/spreads evidence but
-    // can no longer drag a floor below cold-rep reach
-    var inSuiteTimes = Map.empty[String, List[Double]]
-    val results = SparkEntry.queries.flatMap { case (name, fn) =>
-      // GC-BEFORE-HEAVY (r9 experiment, PerfProbe SPARK_GRAFT_PROBE_GC):
-      // the recurring ~1.4x "suite-context factor" on the suite's
-      // heaviest shuffle is RECLAIMABLE garbage, not live residency —
-      // running q_triangles after the heavy graph/PCA family measured
-      // median 11.18s, and an identical run with System.gc() before
-      // each rep measured 7.65s, equal to its 7.63s isolated median
-      // (other heavies unchanged). A GC before each rep of queries
-      // whose PREVIOUS floor is >= 3s costs a handful of collections
-      // per suite and removes that factor at its source; r11 adds the
-      // observed-spread key (see prevSpreads above) so sub-3s queries
-      // with measured suite-context noise get the same treatment.
-      val gcFirst = prevFloors.get(name).exists(_ >= 3.0) ||
-        prevSpreads.get(name).exists(_ >= 3.0)
-      def runOnce(): Option[Double] = {
-        if (gcFirst) System.gc()
-        // noop write forces evaluation of EVERY output column —
-        // count() would let Catalyst prune the projections under test
-        val dt = measuredRep(name) {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        }
-        cleanup()
-        dt
-      }
-      if (elapsed > wallGuardSec) {
-        // WALL GUARD: in a window so degraded that even single reps
-        // overran the guard, stop measuring — a partial per-query map
-        // plus an emitted contract line beats the r3 rc=124 (no number
-        // at all). Skipped queries are reported separately from errors.
-        wallHit = true; skipped ::= name; None
-      } else {
-        val first = runOnce()
-        val extraReps = first match {
-          case None => reps - 1 // crashed: retry up to the full rep count
-          case Some(_) if name.startsWith("q_stream_") => 0
-          case Some(t) if t < fastCut => 0
-          case Some(t) if t >= heavyCut => 1
-          case Some(_) => reps - 1
-        }
-        // extra reps stop at repCutSec (not budgetSec): a 2x-slow window
-        // must still leave adjudication headroom under the wall guard.
-        // rep_cut_hit records THAT event; budget_hit means "measured
-        // time passed budgetSec". SEMANTIC BREAK (ADVICE r11 #1): in
-        // r10-era detail files budget_hit fired at 0.6x budget — the
-        // condition rep_cut_hit records today — so budget_hit is NOT
-        // comparable across the r10/r11 boundary (an r11+ file can read
-        // budget_hit=false/rep_cut_hit=true where r10 wrote
-        // budget_hit=true). Compare rep_cut_hit(r11+) to budget_hit(r10)
-        // RESERVED ADJUDICATION BUDGET (VERDICT r13 Next #2): between
-        // repSoftCutSec (0.45x budget) and repCutSec, median-of-3
-        // queries degrade to 2 reps — on a slow window the saving is
-        // banked for the post-suite probe phase, which on the r13
-        // driver run got NOTHING because the suite ate the whole wall
-        // (69/79 movers unadjudicated). Clean windows finish the suite
-        // phase under ~0.45x budget and never hit this.
-        val wanted = if (elapsed > repCutSec) { repCutHit = true; 0 }
-          else if (elapsed > repSoftCutSec) math.min(extraReps, 1)
-          else extraReps
-        if (elapsed > budgetSec) budgetHit = true
-        val times = first.toList ++ (1 to wanted).flatMap(_ => runOnce())
-        val attempts = 1 + wanted
-        if (times.isEmpty) { failures ::= name; Some(name -> -1.0) }
-        else {
-          // a query that crashed on SOME reps must not look healthy
-          if (times.size < attempts) flaky ::= (name, attempts - times.size)
-          repsUsed += name -> times.size
-          perQueryTimes += name -> times.toList
-          inSuiteTimes += name -> times.toList
-          if (times.size >= 2)
-            spreads += name -> (math.round(times.max / times.min * 100) / 100.0)
-          val t =
-            if (first.exists(_ >= heavyCut) && times.size == 2) times.min
-            else times.sorted.apply(times.size / 2)
-          Some(name -> t)
-        }
+    try spark.catalog.clearCache() catch { case NonFatal(_) => () }
+    try spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    catch { case NonFatal(_) => () }
+    dt
+  }
+  /** A JSON object in field order; None fields are left out. */
+  private[graft] final case class Obj(fields: (String, Any)*)
+  /** The artifacts' encoder: strings (keys too) through Verify's escaper,
+    * Maps and [[Obj]]s as objects, other collections as arrays. */
+  private[graft] def json(v: Any): String = v match {
+    case s: String => Verify.jsonString(s)
+    case o: Obj => o.fields.collect { case (k, x) if x != None =>
+      Verify.jsonString(k) + ":" + json(x) }.mkString("{", ",", "}")
+    case Some(x) => json(x)
+    case m: collection.Map[_, _] =>
+      json(Obj(m.toSeq.map { case (k, x) => k.toString -> x }: _*))
+    case xs: Iterable[_] => xs.map(json).mkString("[", ",", "]")
+    case x => x.toString
+  }
+  private val mapper = new ObjectMapper()
+  private def queryNumbers(j: JsonNode): Map[String, Double] =
+    j.properties.asScala.collect { case e if e.getKey.startsWith("q_") &&
+      e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
+  // Floors are only comparable at the same scale factor AND cpu
+  // count: the OFFICIAL per-round bench runs at sf0.1 / local[32]
+  // (BENCH_r07.json records cpus:32) — that run owns
+  // bench_floor.json; any other sf or cpu count (dev smokes at
+  // sf0.001/sf0.01, probes without SPARK_GRAFT_CPUS exported) keeps
+  // its own baseline in bench_floor_dev.json so it can neither
+  // pollute nor clobber the official one. (Round-8 incident: an A/B
+  // pair at the local[4] default silently rewrote local[32] floors —
+  // q_triangles costs ~18s at 4 threads vs ~6s at 32, so a cpu
+  // mismatch fabricates 3x "regressions" and buries real ones.) The
+  // file records sf+cpus and a mismatch skips comparison and write.
+  // Files written before the cpus field existed (pre-r11) are official
+  // (32); bench_detail.json carries the same two fields.
+  private def sameConfig(j: JsonNode, sfKey: String, cpusKey: String,
+      sfDir: String, cpus: String): Boolean =
+    Option(j.get(sfKey)).map(_.asText).contains(sfDir) &&
+      Option(j.get(cpusKey)).fold("32")(_.asText) == cpus
+  // None when the file is absent or (reported on stderr) unreadable
+  private def readJson[T](path: Path)(f: JsonNode => T): Option[T] =
+    if (!Files.exists(path)) None
+    else try Some(f(mapper.readTree(Files.readString(path))))
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] ignoring unreadable $path: $e"); None }
+
+  /** The previous round's floor file, read once and gated once on
+    * sf+cpus (a file of another configuration reads as empty). Besides
+    * the floors it carries the consecutive degraded-window closes for
+    * the red-state contract (ADVICE r10 #1) — persisted here, not in
+    * bench_detail.json: the detail file is overwritten by every dev
+    * smoke at any sf, so a mid-round dev run would silently reset the
+    * streak; the floor file is already sf/cpus-gated and only the
+    * matching-configuration run rewrites it — plus, by the same owner
+    * rule, the carried suspect_query list and the clean-window spread
+    * history. Absent keys (pre-r11/r15 files) read 0 / empty. */
+  private[graft] case class FloorFile(floors: Map[String, Double],
+      degradedStreak: Int, suspects: Seq[String], spreadHist: Seq[Double])
+  private[graft] object FloorFile {
+    val empty: FloorFile = FloorFile(Map.empty, 0, Nil, Nil)
+    def parse(j: JsonNode, sfDir: String, cpus: String): FloorFile =
+      if (!sameConfig(j, "__sf", "__cpus", sfDir, cpus)) empty
+      else FloorFile(queryNumbers(j),
+        Option(j.get("__degraded_streak")).fold(0)(_.asInt),
+        j.path("__suspect").asScala.toSeq.map(_.asText)
+          .filter(_.startsWith("q_")).distinct,
+        j.path("__spread_hist").asScala.toSeq.filter(_.isNumber)
+          .map(_.asDouble))
+    def read(path: Path, sfDir: String, cpus: String): FloorFile =
+      readJson(path)(parse(_, sfDir, cpus)).getOrElse(empty)
+  }
+  /** Sentinel picks (rationale at [[adjudicate]]). */
+  private[graft] case class Sentinels(mid: Option[String],
+      micro: Option[String], second: Option[String], heavy: Option[String]) {
+    def all: Seq[String] = mid.toSeq ++ micro ++ second ++ heavy
+  }
+  // the drifts a mover is judged against; eff = max(suite, probe drift)
+  private[graft] case class Drifts(eff: Double, stream: Double,
+      micro: Double, degraded: Boolean)
+  /** One floor_evidence adjudication record, in its key order. */
+  private[graft] case class Adjudication(query: String, prevFloor: Double,
+      inSuiteRatio: Option[Double], fresh: Seq[Double], verdict: String,
+      spread: Option[Double] = None, repinnedFloor: Option[Double] = None,
+      classFreshMedian: Option[Double] = None,
+      freshMedian: Option[Double] = None,
+      confirmSentinel: Option[Double] = None) {
+    def obj: Obj = Obj("query" -> query,
+      "prev_floor" -> prevFloor, "in_suite_ratio" -> inSuiteRatio,
+      "fresh_reps" -> fresh.map(r3),
+      "fresh_min" -> fresh.minOption.map(r3), "spread" -> spread,
+      "repinned_floor" -> repinnedFloor,
+      "class_fresh_median" -> classFreshMedian,
+      "fresh_median" -> freshMedian,
+      "confirm_sentinel" -> confirmSentinel, "verdict" -> verdict)
+  }
+  /** The verdict sets (a query has at most one record). */
+  private[graft] case class Verdicts(entries: Seq[Adjudication]) {
+    private def named(verdicts: String*): Set[String] =
+      entries.filter(e => verdicts.contains(e.verdict)).map(_.query).toSet
+    val confirmed = named("confirmed_regression")
+    val suspectWindow = named("suspect_window")
+    val suspectQuery = named("suspect_query")
+    // unresolved suspects, carried forward in the floor file
+    val carried = named("suspect_query", "suspect_deferred")
+    val ambient = named("ambient_drift", "ambient_class_drift",
+      "below_confirm_floor", "cleared_class_fresh")
+    val probeErrors = named("probe_error")
+    val unadjudicated = named("unadjudicated_budget")
+  }
+  /** The window evidence, the verdicts and the next floor file. */
+  private[graft] case class Outcome(rawMoves: Map[String, Double],
+      suiteDrift: Double, probeDrift: Double, probeMax: Option[Double],
+      streamMedian: Double, drifts: Drifts, inSuiteSpreadMedian: Double,
+      spreadThreshold: Double, sentinels: Seq[(String, Double)],
+      verdicts: Verdicts, floors: Map[String, Double], degradedStreak: Int,
+      spreadHist: Seq[Double], rebaseApplied: Boolean, redState: Boolean)
+
+  /** The adjudication policy, run after the timed suite: pure apart from
+    * `probe(name, reps)` (fresh isolated reps; empty when all threw) and
+    * `wallLeft()` (false once the wall guard has passed), so a test can
+    * pass fakes for both. `inSuite` holds each measured query's in-suite
+    * reps; `errors` counts queries that failed every rep.
+    *
+    * Regression-proof perf protocol (VERDICT r5 Next #2): per-query
+    * best-of-run floors. A floor (min over reps) can't be inflated by a
+    * noise spike, so floor-vs-floor movement >1.5x is a REAL plan or
+    * code regression, while suite-total movement with stable floors is
+    * environment drift. We read the previous round's floors from
+    * bench_floor.json, report movers in bench_detail.json, then
+    * overwrite bench_floor.json with this round's floors.
+    *
+    * MECHANIZED MOVER ADJUDICATION (VERDICT r8 Next #1): for three
+    * straight rounds every >1.5x in-suite floor mover was re-probed BY
+    * HAND (judge-side isolated median-of-3) and every one was machine
+    * noise — r8 flagged 32, all drift. Bench now runs that same
+    * deterministic loop itself after the suite: each raw mover gets
+    * fresh post-suite probes (cleanup + System.gc between, the closest
+    * in-process analogue of tools/PerfProbe — the suite's checkpoint
+    * blocks and SQL cache are released, so the probe measures the
+    * query, not suite residue), the fresh samples join the query's rep
+    * pool so a cleared mover's floor self-heals downward, and the
+    * stdout `floor_regressions` count reports CONFIRMED verdicts ONLY
+    * (best fresh probe >1.5x the drift-adjusted previous floor, in a
+    * non-degraded window, with the contemporaneous sentinel quiet —
+    * the r10 fail-safe contract). Everything else is separated onto
+    * its own stdout field: `suspect_window` (beats drift but the
+    * window is degraded), `ambient_drift`, `probe_errors`,
+    * `unadjudicated` (wall guard hit first), `skipped` — never raw
+    * in-suite ratios. Contract consumers must treat
+    * floor_regressions>0 OR (window_degraded AND suspect_window>0) OR
+    * degraded_streak>=2 as red (`red_state` below computes exactly
+    * that). Per-mover verdicts land in floor_evidence_auto.json.
+    * This subsumes the old 1-rep confirm pass (round 6): a 1-rep mover
+    * is just the weakest-evidence case of the same loop. */
+  private[graft] def adjudicate(inSuite: Map[String, Seq[Double]],
+      prev: FloorFile, registry: Set[String], official: Boolean,
+      errors: Int, wallHit: Boolean, rebaseRequested: Boolean,
+      probe: (String, Int) => Seq[Double],
+      wallLeft: () => Boolean): Outcome = {
+    val prevFloors = prev.floors
+    val floorsNow = inSuite.map { case (k, ts) => k -> r3(ts.min) }
+    // floorsNow / previous floor over the common queries that pass `p`
+    def ratiosWhere(p: (String, Double) => Boolean): Seq[Double] =
+      floorsNow.toSeq.flatMap { case (k, c) =>
+        prevFloors.get(k).filter(f => f > 0 && p(k, f)).map(c / _) }
+    val rawMoves = floorsNow.flatMap { case (k, cur) =>
+      prevFloors.get(k).collect {
+        case p if p > 0 && cur / p > 1.5 => k -> r2(cur / p)
       }
     }
-    // STDOUT gets ONE JSON line (the driver's contract:
-    // metric/value/unit/queries/sf + adjudication fields). The per-query
-    // map rides on the line per the r15 verdict (the driver's PERF
-    // per-query and scaling blocks consume it); reps used, noise
-    // spreads, flaky reps and wall time additionally live in
-    // bench_detail.json, committed each round, and the line itself is
-    // mirrored to bench_line.json in case a stdout archive truncates.
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val total = r3(results.values.filter(_ >= 0).sum)
-    val errs = failures.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    val flk = flaky.map { case (n, f) => s"\"" + n + "\":" + f }
-      .mkString("{", ",", "}")
-    // Regression-proof perf protocol (VERDICT r5 Next #2): per-query
-    // best-of-run floors. A floor (min over reps) can't be inflated by a
-    // noise spike, so floor-vs-floor movement >1.5x is a REAL plan or
-    // code regression, while suite-total movement with stable floors is
-    // environment drift. We read the previous round's floors from
-    // bench_floor.json, report movers in bench_detail.json, then
-    // overwrite bench_floor.json with this round's floors.
-    def floorsNow: Map[String, Double] = results.collect {
-      case (k, v) if v >= 0 =>
-        k -> r3(inSuiteTimes.getOrElse(k, List(v)).min)
-    }.toMap
-    def movesOf(fl: Map[String, Double]): Map[String, Double] =
-      fl.flatMap { case (k, cur) =>
-        prevFloors.get(k).collect {
-          case prev if prev > 0 && cur / prev > 1.5 =>
-            k -> (math.round(cur / prev * 100) / 100.0)
-        }
-      }
-    // MECHANIZED MOVER ADJUDICATION (VERDICT r8 Next #1): for three
-    // straight rounds every >1.5x in-suite floor mover was re-probed BY
-    // HAND (judge-side isolated median-of-3) and every one was machine
-    // noise — r8 flagged 32, all drift. Bench now runs that same
-    // deterministic loop itself after the suite: each raw mover gets
-    // fresh post-suite probes (cleanup + System.gc between, the closest
-    // in-process analogue of tools/PerfProbe — the suite's checkpoint
-    // blocks and SQL cache are released, so the probe measures the
-    // query, not suite residue), the fresh samples join the query's rep
-    // pool so a cleared mover's floor self-heals downward, and the
-    // stdout `floor_regressions` count reports CONFIRMED verdicts ONLY
-    // (best fresh probe >1.5x the drift-adjusted previous floor, in a
-    // non-degraded window, with the contemporaneous sentinel quiet —
-    // the r10 fail-safe contract). Everything else is separated onto
-    // its own stdout field: `suspect_window` (beats drift but the
-    // window is degraded), `ambient_drift`, `probe_errors`,
-    // `unadjudicated` (wall guard hit first), `skipped` — never raw
-    // in-suite ratios. Contract consumers must treat
-    // floor_regressions>0 OR (window_degraded AND suspect_window>0) OR
-    // degraded_streak>=2 as red (`red_state` below computes exactly
-    // that). Per-mover verdicts land in floor_evidence_auto.json.
-    // This subsumes the old 1-rep confirm pass (round 6): a 1-rep mover
-    // is just the weakest-evidence case of the same loop.
-    val rawMoves = movesOf(floorsNow)
     // in-suite spread evidence, computed from the SUITE phase only
     // (probe pools excluded — the cold/warm asymmetry must not pollute
     // it). Feeds the degraded-window rule (VERDICT r13 Next #3: the
     // heavy-query-stall mode reads 1.59 here while sentinels read 1.0)
     // and the rebase evidence record.
-    val inSuiteSpreadMedian = {
-      val sp = inSuiteTimes.values.collect {
-        case ts if ts.size >= 2 => ts.max / ts.min }.toSeq.sorted
-      if (sp.isEmpty) 1.0 else math.round(sp(sp.size / 2) * 100) / 100.0
-    }
+    val inSuiteSpreadMedian = median2(inSuite.values.collect {
+      case ts if ts.size >= 2 => ts.max / ts.min }.toSeq).getOrElse(1.0)
     // AMBIENT-DRIFT DISCRIMINATOR: floors are monotone BEST-EVER minima,
     // so on a day uniformly slower than the floors' best-ever windows,
     // even honest fresh isolated probes of untouched queries exceed
@@ -748,32 +627,8 @@ object Bench {
     // regression count (a true >=1.5x-beyond-drift regression still
     // confirms; sub-drift regressions were invisible to the old
     // protocol too, since the suite total hid them).
-    val suiteDrift = {
-      val rs = floorsNow.flatMap { case (k, c) =>
-        prevFloors.get(k).filter(_ > 0).map(c / _) }.toSeq.sorted
-      if (rs.isEmpty) 1.0
-      else math.max(1.0, math.round(rs(rs.size / 2) * 100) / 100.0)
-    }
-    // run one query fresh (GC + cleanup), recording samples in the pool
-    def freshProbe(name: String, want: Int): Seq[Double] = {
-      System.gc()
-      val fresh = (1 to want).flatMap { _ =>
-        val dt = measuredRep(name) {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        cleanup()
-        dt
-      }
-      if (fresh.nonEmpty) {
-        perQueryTimes += name ->
-          (fresh.toList ++ perQueryTimes.getOrElse(name, Nil))
-        repsUsed += name -> perQueryTimes(name).size
-        val ts = perQueryTimes(name)
-        spreads += name -> (math.round(ts.max / ts.min * 100) / 100.0)
-      }
-      fresh
-    }
+    val suiteDrift = median2(ratiosWhere((_, _) => true))
+      .fold(1.0)(math.max(1.0, _))
     // SENTINEL DRIFT (VERDICT r9 Next #1c): suite_drift is measured from
     // the SUITE phase; in a window degrading over time, fresh probes run
     // minutes later are judged against stale drift — r9's one
@@ -788,41 +643,37 @@ object Bench {
     // sentinel DILUTES micro-class ambient — +0.27s of fixed job
     // overhead reads 2.1x on a 0.25s query but only 1.36x on the
     // sentinel, so r11's phantom confirm sailed past a "quiet" 1.12
-    // reading. When any raw mover is micro (prev floor < microCut) one
+    // reading. When any raw mover is micro (prev floor < MicroCut) one
     // sentinel is drawn FROM that class (closest to 0.4s) so its
     // ratio moves like the movers it vouches for; the other stays the
     // historical mid-range pick.
-    val sentinelPool = prevFloors.toSeq
-      .filter { case (k, f) => !rawMoves.contains(k) &&
-        SparkEntry.queries.contains(k) && !k.startsWith("q_stream_") &&
-        f >= 0.1 && f <= 3.0 }
-    val microSentinel: Option[String] =
-      if (rawMoves.isEmpty ||
-          !rawMoves.keys.exists(k => prevFloors.get(k).exists(_ < microCut)))
-        None
-      else sentinelPool.filter(_._2 < microCut)
-        .sortBy { case (k, f) => (math.abs(f - 0.4), k) }
-        .headOption.map(_._1)
-    val midSentinel: Option[String] =
+    val candidates = prevFloors.toSeq.filter { case (k, _) =>
+      !rawMoves.contains(k) && registry(k) && !k.startsWith("q_stream_") }
+    val pool = candidates.filter { case (_, f) => f >= 0.1 && f <= 3.0 }
+    // each pick: the pool member whose floor is closest to a target
+    // (no sentinels when nothing moved)
+    def closest(among: Seq[(String, Double)], target: Double): Option[String] =
       if (rawMoves.isEmpty) None
-      else sentinelPool.filter { case (k, f) =>
-          f >= 0.3 && !microSentinel.contains(k) }
-        .sortBy { case (k, f) => (math.abs(f - 0.75), k) }
-        .headOption.map(_._1)
+      else among.minByOption { case (k, f) => (math.abs(f - target), k) }
+        .map(_._1)
+    val microSentinel =
+      if (!rawMoves.keys.exists(k => prevFloors.get(k).exists(_ < MicroCut)))
+        None
+      else closest(pool.filter(_._2 < MicroCut), 0.4)
+    val midSentinel = closest(pool.filter { case (k, f) =>
+      f >= 0.3 && !microSentinel.contains(k) }, 0.75)
     // ADVICE r12 (medium): when no raw mover is micro, microSentinel is
     // None — without a replacement the pair collapses to ONE sentinel,
     // probe_drift loses its documented min-of-two conservatism (a single
     // noisy probe can inflate effDrift and over-clear real movers as
-    // ambient) and probeMaxRatio stays MaxValue, permanently disabling
+    // ambient) and probe_max stays unmeasured, permanently disabling
     // the r12 degraded-window override. Draw a second mid-range sentinel
     // from the pool instead (next-closest to 0.75s, distinct from
     // midSentinel) so the pair is always two whenever movers exist.
-    val secondSentinel: Option[String] =
-      if (rawMoves.isEmpty || microSentinel.nonEmpty) None
-      else sentinelPool.filter { case (k, f) =>
-          f >= 0.3 && !midSentinel.contains(k) }
-        .sortBy { case (k, f) => (math.abs(f - 0.75), k) }
-        .headOption.map(_._1)
+    val secondSentinel =
+      if (microSentinel.nonEmpty) None
+      else closest(pool.filter { case (k, f) =>
+        f >= 0.3 && !midSentinel.contains(k) }, 0.75)
     // HEAVY sentinel (VERDICT r13 Next #3): the r13 driver window
     // stalled heavy queries 10-50x while both fixed-overhead sentinels
     // read ~1.0 — CPU steal during long all-core stages throttles
@@ -833,24 +684,12 @@ object Bench {
     // closest to 4s: its ratio joins probe_max, so the
     // degraded-window override (both/all sentinels <= 1.1) can no
     // longer fire while the heavy class is stalling.
-    val heavySentinel: Option[String] =
-      if (rawMoves.isEmpty) None
-      else prevFloors.toSeq
-        .filter { case (k, f) => !rawMoves.contains(k) &&
-          SparkEntry.queries.contains(k) && !k.startsWith("q_stream_") &&
-          f > 3.0 && f <= 8.0 }
-        .sortBy { case (k, f) => (math.abs(f - 4.0), k) }
-        .headOption.map(_._1)
-    val sentinels: Seq[String] =
-      (midSentinel.toSeq ++ microSentinel.toSeq ++ secondSentinel.toSeq ++
-        heavySentinel.toSeq)
-    val sentinelRatios: Seq[(String, Double)] = sentinels.flatMap { name =>
-      if (elapsed > wallGuardSec) None
-      else freshProbe(name, 2) match {
-        case fresh if fresh.nonEmpty =>
-          Some(name -> (math.round(fresh.min / prevFloors(name) * 100) / 100.0))
-        case _ => None
-      }
+    val heavySentinel = closest(candidates.filter { case (_, f) =>
+      f > 3.0 && f <= 8.0 }, 4.0)
+    val sentinels =
+      Sentinels(midSentinel, microSentinel, secondSentinel, heavySentinel)
+    val sentinelRatios: Seq[(String, Double)] = sentinels.all.flatMap { n =>
+      if (!wallLeft()) None else sentinelRatio(n, prevFloors, probe).map(n -> _)
     }
     val probeDrift =
       if (sentinelRatios.isEmpty) suiteDrift
@@ -863,17 +702,13 @@ object Bench {
     val effDrift = math.max(suiteDrift, probeDrift)
     // streaming class's own median in-suite ratio (raw — the class
     // evidence both the degraded declaration and streamDrift key off)
-    val streamMedianRatio = {
-      val rs = floorsNow.collect { case (k, c) if k.startsWith("q_stream_") =>
-        prevFloors.get(k).filter(_ > 0).map(c / _) }.flatten.toSeq.sorted
-      if (rs.isEmpty) 1.0
-      else math.round(rs(rs.size / 2) * 100) / 100.0
-    }
+    val streamMedianRatio = median2(ratiosWhere((k, _) =>
+      k.startsWith("q_stream_"))).getOrElse(1.0)
     // the WORSE sentinel ratio: the degraded-override below needs BOTH
     // sentinels decisively quiet; fewer than 2 measured = no override
-    val probeMaxRatio =
-      if (sentinelRatios.size >= 2) sentinelRatios.map(_._2).max
-      else Double.MaxValue
+    val probeMax =
+      if (sentinelRatios.size >= 2) Some(sentinelRatios.map(_._2).max)
+      else None
     // window_degraded: past ~1.3x drift the discriminator cannot
     // distinguish environment drift from a uniform suite-wide code
     // regression (ADVICE r9 #1) — every verdict below is conditioned on
@@ -882,10 +717,11 @@ object Bench {
     // contrary probe evidence (both sentinels at floor speed, streaming
     // class quiet) overrides a suite-only drift reading — the floors'
     // warm-probe-minimum bias, not the machine.
-    val spreadThreshold = spreadThresholdOf(prevSpreadHist)
+    val spreadThreshold = spreadThresholdOf(prev.spreadHist)
     val windowDegraded =
-      windowDegradedOf(effDrift, probeMaxRatio, streamMedianRatio,
-        spreadEvidenceOf(official, inSuiteSpreadMedian), spreadThreshold)
+      windowDegradedOf(effDrift, probeMax.getOrElse(Double.MaxValue),
+        streamMedianRatio, spreadEvidenceOf(official, inSuiteSpreadMedian),
+        spreadThreshold)
     // CLASS DRIFT (r10 poisoned-window rehearsal): CPU contention hits
     // query classes unevenly — with 28 spinners the 18 streaming faces
     // ran 4-6x slow (micro-batch trigger scheduling + state store are
@@ -900,7 +736,7 @@ object Bench {
     // guard.)
     val streamDrift = math.max(effDrift, streamMedianRatio)
     // MICRO-CLASS DRIFT (VERDICT r11 Next #2; rationale on verdictOf):
-    // the median in-suite ratio of the whole sub-`microCut` class —
+    // the median in-suite ratio of the whole sub-`MicroCut` class —
     // applied in EVERY window, unlike streamDrift's degraded-only rule,
     // because micro-class ambient (scheduler/JIT overhead) routinely
     // runs hot on an otherwise-quiet machine (the r11 phantom ran at
@@ -911,223 +747,11 @@ object Bench {
     // would inflate microDrift itself — that case is caught by the
     // absolute-delta floor keeping each mover unconfirmable while the
     // SUITE total and suite_drift expose the uniform shift.
-    val microDrift = {
-      val rs = floorsNow.flatMap { case (k, c) =>
-        prevFloors.get(k).filter(f => f > 0 && f < microCut).map(c / _)
-      }.toSeq.sorted
-      if (rs.isEmpty) effDrift
-      else math.max(effDrift, math.round(rs(rs.size / 2) * 100) / 100.0)
-    }
-    var adjudications = List.empty[String]
-    var ambient = Set.empty[String]
-    var confirmedSet = Set.empty[String]
-    var suspectSet = Set.empty[String]
-    var probeErrSet = Set.empty[String]
-    var unadjSet = Set.empty[String]
-    var suspectQuerySet = Set.empty[String]   // new suspects this run
-    var carriedSuspects = Set.empty[String]   // unresolved, carried forward
-    var repinnedFloors = Map.empty[String, Double] // suspect_repinned
-    // CARRIED-SUSPECT RESOLUTION (VERDICT r14 Next #2): queries the
-    // previous official run flagged suspect_query are probed FIRST —
-    // before any mover adjudication — while the window is at its best.
-    // Resolution rule on suspectResolutionOf: cleared at <= 1.3x,
-    // re-pinned (floor := fresh.min, an upward move WITH recorded
-    // evidence) on a second consecutive tight >1.3x reading, deferred
-    // on a degraded window, dropped as loose noise otherwise.
-    prevSuspects.filter(n =>
-        SparkEntry.queries.contains(n) && prevFloors.contains(n))
-      .sorted.foreach { name =>
-      if (elapsed >= wallGuardSec) {
-        carriedSuspects += name
-        adjudications ::= s"""{"query":"$name","prev_floor":${prevFloors(
-          name)},"fresh_reps":[],"verdict":"suspect_deferred"}"""
-      } else {
-        val want = if (prevFloors(name) >= 3.0) 2 else 3
-        val fresh = freshProbe(name, want)
-        if (fresh.isEmpty) {
-          probeErrSet += name
-          adjudications ::= s"""{"query":"$name","prev_floor":${prevFloors(
-            name)},"fresh_reps":[],"verdict":"probe_error"}"""
-        } else {
-          val prevF = prevFloors(name)
-          val frMin = fresh.min / prevF
-          val spread = fresh.max / fresh.min
-          val verdict =
-            suspectResolutionOf(frMin, spread, windowDegraded)
-          verdict match {
-            case "suspect_deferred" => carriedSuspects += name
-            case "suspect_repinned" =>
-              repinnedFloors += name -> r3(fresh.min)
-            case _ => ()
-          }
-          adjudications ::= s"""{"query":"$name","prev_floor":$prevF,""" +
-            s""""fresh_reps":[${fresh.map(r3).mkString(",")}],""" +
-            s""""fresh_min":${r3(fresh.min)},"spread":${math.round(
-              spread * 100) / 100.0}""" +
-            (if (verdict == "suspect_repinned")
-              s""","repinned_floor":${r3(fresh.min)}""" else "") +
-            s""","verdict":"$verdict"}"""
-        }
-      }
-    }
-    val resolvedSuspects = prevSuspects.toSet
-    // BREADTH-FIRST ADJUDICATION (VERDICT r13 Next #2): pass 1 gives
-    // EVERY raw mover one cheap probe in descending-ratio order before
-    // pass 2 escalates anyone — the r13 driver run ended with 69/79
-    // movers unadjudicated because depth-first full-rep probes on the
-    // headliners drained the wall budget before the tail was probed at
-    // all. Most movers on a noisy window clear on that single probe
-    // (fresh <= 1.5x floor — a fast rep is direct evidence; spikes
-    // inflate, never deflate), so breadth costs LESS than the old
-    // heavy-first min-of-2 on clean windows too.
-    // carried suspects already adjudicated above — they must not be
-    // probed twice through the mover path in the same window
-    val moverOrder = moverOrderOf(rawMoves)
-      .filterNot(resolvedSuspects.contains)
-    var breadthProbes = Map.empty[String, Seq[Double]]
-    moverOrder.foreach { name =>
-      if (elapsed < wallGuardSec)
-        breadthProbes += name -> freshProbe(name, 1)
-    }
-    // fresh sibling-class medians from the breadth pass itself
-    // (VERDICT r14 Next #3a): what fresh probes of each floor class
-    // cost RIGHT NOW, the contemporaneous complement of suite_drift
-    def floorClassOf(f: Double): String =
-      if (f < microCut) "micro" else if (f >= 3.0) "heavy" else "mid"
-    val classFreshMedians: Map[String, Option[Double]] = {
-      val ratios = breadthProbes.toSeq.collect {
-        case (n, ps) if ps.nonEmpty && prevFloors.get(n).exists(_ > 0) =>
-          floorClassOf(prevFloors(n)) -> ps.min / prevFloors(n)
-      }
-      Seq("micro", "mid", "heavy").map { c =>
-        c -> classFreshMedianOf(ratios.collect { case (`c`, r) => r })
-      }.toMap
-    }
-    // ESCALATION RESERVE (VERDICT r14 Next #3b): extra reps are spent
-    // on at most `escalationReserve` movers — the worst borderlines,
-    // first in moverOrder; the tail adjudicates on its breadth probe
-    // plus the class-fresh rule, so the wall can no longer starve
-    // exactly the cases escalation exists for.
-    var escalationsUsed = 0
-    moverOrder.foreach { name =>
-      val ratio = rawMoves(name)
-      val prevF = prevFloors(name)
-      breadthProbes.get(name) match {
-      case None =>
-        // wall guard hit before this mover's breadth probe
-        unadjSet += name
-        adjudications ::= s"""{"query":"$name","prev_floor":$prevF,""" +
-          s""""in_suite_ratio":$ratio,"fresh_reps":[],"verdict":"unadjudicated_budget"}"""
-      case Some(first)
-          if first.nonEmpty && first.min / prevF > 1.5 &&
-            classFreshClearOf(first.min / prevF,
-              classFreshMedians(floorClassOf(prevF))) =>
-        // CLASS-FRESH CLEAR (r14 Next #3a): the probe is > 1.5x floor
-        // but tracks its own class's contemporaneous fresh cost — the
-        // late-window ambient shape that left 7 movers unadjudicated
-        // in the r14 driver run. Cleared on the breadth probe alone.
-        ambient += name
-        adjudications ::= s"""{"query":"$name","prev_floor":$prevF,""" +
-          s""""in_suite_ratio":$ratio,"fresh_reps":[${first.map(r3)
-            .mkString(",")}],"fresh_min":${r3(first.min)},""" +
-          s""""class_fresh_median":${classFreshMedians(
-            floorClassOf(prevF)).getOrElse(-1.0)},""" +
-          s""""verdict":"cleared_class_fresh"}"""
-      case Some(first) =>
-        // pass 2: escalate only movers the breadth probe did not clear
-        // (heavy floors min-of-2 total, the rest median-of-3; a thrown
-        // breadth probe retries the full class count), within the
-        // escalation reserve
-        val extraWant = escalationWantOf(prevF, first)
-        val mayEscalate = escalationsUsed < escalationReserve
-        if (extraWant > 0 && mayEscalate) escalationsUsed += 1
-        val fresh = first ++ (if (extraWant > 0 && mayEscalate &&
-          elapsed < wallGuardSec) freshProbe(name, extraWant) else Nil)
-        if (fresh.nonEmpty) {
-          val fr = fresh.min / prevF
-          val isMicro = prevF < microCut
-          val drift =
-            if (windowDegraded && name.startsWith("q_stream_")) streamDrift
-            else effDrift
-          // CONTEMPORANEOUS SENTINEL (r10 closing-run phantom: an
-          // untouched query confirmed at 2.0x whose quiet re-probe
-          // measured 1.24x — the phase-START sentinels were minutes
-          // stale by then). A tentative confirm triggers one sentinel
-          // re-probe RIGHT NOW — CLASS-MATCHED (r11 Next #2): a micro
-          // mover is vouched for by the micro sentinel, whose ratio
-          // moves with the same fixed-overhead ambient; if the
-          // sentinel itself reads drifted (> 1.25x its floor), the
-          // moment is slow, not the query. Cost is paid only on
-          // would-be confirms (rare).
-          lazy val confirmSentinelRatio: Option[Double] = {
-            val pick = (if (isMicro) microSentinel else midSentinel)
-              .orElse(sentinels.headOption)
-            pick.flatMap { sn =>
-              freshProbe(sn, 2) match {
-                case f if f.nonEmpty =>
-                  Some(math.round(f.min / prevFloors(sn) * 100) / 100.0)
-                case _ => None
-              }
-            }
-          }
-          // suspect_window: a mover that beats every drift adjustment
-          // in a DEGRADED window is still not certifiable — the
-          // discriminator has already declared it cannot tell
-          // environment from code here. Reported on its own field; a
-          // real regression re-confirms in the next clean window
-          // (monotone floors guarantee the comparison survives).
-          val (verdict0, srOpt) = verdictOf(fr, fresh.min - prevF, isMicro,
-            drift, microDrift, windowDegraded, absDeltaSec,
-            confirmSentinelRatio)
-          // a regression is NEVER confirmed on 1-rep evidence (ADVICE
-          // r13): when the escalation was wall-blocked the single
-          // breadth probe stays on the record as unadjudicated — a
-          // one-off spike must not flip red_state
-          val verdict1 =
-            if (verdict0 == "confirmed_regression" && fresh.size < 2)
-              "unadjudicated_budget"
-            else verdict0
-          // SUSPECT-QUERY OVERRIDE (VERDICT r14 Next #2): an ambient
-          // verdict backed by TIGHT >1.5x fresh evidence on a clean
-          // window is a contradiction — consistent isolated reps are
-          // exactly what ambient noise cannot produce. Carried in the
-          // floor file and auto-probed first next window.
-          val verdict =
-            if ((verdict1 == "ambient_drift" ||
-                 verdict1 == "ambient_class_drift") &&
-                suspectQueryOf(fresh, prevF, windowDegraded))
-              "suspect_query"
-            else verdict1
-          verdict match {
-            case "ambient_drift" | "ambient_class_drift" |
-                 "below_confirm_floor" => ambient += name
-            case "suspect_query" =>
-              suspectQuerySet += name; carriedSuspects += name
-            case "suspect_window" => suspectSet += name
-            case "confirmed_regression" => confirmedSet += name
-            case "unadjudicated_budget" => unadjSet += name
-            case _ => ()
-          }
-          val sentinelNote = srOpt
-            .map(sr => s""","confirm_sentinel":$sr""").getOrElse("")
-          adjudications ::= s"""{"query":"$name","prev_floor":$prevF,""" +
-            s""""in_suite_ratio":$ratio,"fresh_reps":[${fresh.map(r3)
-              .mkString(",")}],"fresh_min":${r3(fresh.min)},""" +
-            // LOWER median ((size-1)/2): with the heavy movers' 2-rep
-            // pool, size/2 would report the WORSE probe as "median"
-            // and overstate the mover's isolated cost in the evidence
-            s""""fresh_median":${r3(fresh.sorted.apply((fresh.size - 1) / 2))}""" +
-            sentinelNote + s""","verdict":"$verdict"}"""
-        } else {
-          // a mover whose probes all threw is a FAILING query, not a
-          // perf regression — counted on its own stdout field
-          // (ADVICE r9 #4), never folded into floor_regressions
-          probeErrSet += name
-          adjudications ::= s"""{"query":"$name","prev_floor":$prevF,""" +
-            s""""in_suite_ratio":$ratio,"fresh_reps":[],"verdict":"probe_error"}"""
-        }
-      }
-    }
+    val microDrift = median2(ratiosWhere((_, f) => f < MicroCut))
+      .fold(effDrift)(math.max(effDrift, _))
+    val drifts = Drifts(effDrift, streamDrift, microDrift, windowDegraded)
+    val verdicts = Verdicts(judgeMovers(drifts, prevFloors, rawMoves,
+      prev.suspects, registry, sentinels, probe, wallLeft))
     // MONOTONE floors (VERDICT r7 Next #1): the committed floor is
     // min(previous floor, this round's best rep). A noisy closing run
     // can therefore never re-pin a floor UPWARD and blind the next
@@ -1153,69 +777,23 @@ object Bench {
     // under SPARK_GRAFT_FLOOR_REBASE=1 on an official run passing the
     // floor-independent stability gate (composeFloors + rebaseStableOf
     // scaladocs carry the full r12 Next #3 rationale)
-    val rebaseRequested = official &&
-      sys.env.get("SPARK_GRAFT_FLOOR_REBASE").contains("1")
     val rebaseApplied = rebaseRequested && rebaseStableOf(
-      confirmedSet.size, failures.size, wallHit, streamMedianRatio,
-      unadjSet.size, probeErrSet.size, effDrift)
+      verdicts.confirmed.size, errors, wallHit, streamMedianRatio,
+      verdicts.unadjudicated.size, verdicts.probeErrors.size, effDrift)
     // suspect re-pins override the monotone-min composition: they are
     // the mechanized evidence-backed upward edit (adjudication line
     // carries the reps), scoped to exactly the suspect-resolved names
     val floors: Map[String, Double] = composeFloors(
-      prevFloors, floorsNow, SparkEntry.queries.keys,
-      windowDegraded, rebaseApplied) ++ repinnedFloors
-    // CONFIRMED verdicts only on the contract line (VERDICT r9 Next
-    // #1a); ambient / probe_error / unadjudicated each get their own
-    // field. (Since the floor basis is in-suite-only now, probe reps no
-    // longer shrink floorsNow — the confirmedSet filter alone separates
-    // real movers from cleared ones.)
-    val floorMoves = movesOf(floorsNow)
-      .filter { case (k, _) => confirmedSet(k) }
-    // built AFTER the confirm pass so reps_used/spreads include its runs
-    val ru = repsUsed.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val sp = spreads.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // computed before floorsJson so the streak persists in the floor
-    // file (sf/cpus-gated, official-run-owned — see prevDegradedStreak)
-    val degradedStreak = if (windowDegraded) prevDegradedStreak + 1 else 0
+      prevFloors, floorsNow, registry, windowDegraded, rebaseApplied) ++
+      verdicts.entries.flatMap(e => e.repinnedFloor.map(e.query -> _))
+    // persisted in the floor file (see FloorFile)
+    val degradedStreak = if (windowDegraded) prev.degradedStreak + 1 else 0
     // clean official windows teach the adaptive spread threshold
     // (spreadThresholdOf); degraded windows must not
-    val spreadHistNew: Seq[Double] =
+    val spreadHist =
       if (official && !windowDegraded)
-        (prevSpreadHist :+ inSuiteSpreadMedian).takeRight(8)
-      else prevSpreadHist
-    val suspectJson = carriedSuspects.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val floorsJson = (Seq("\"__sf\":\"" + sfDir + "\"",
-      "\"__cpus\":\"" + cpus + "\"",
-      "\"__degraded_streak\":" + degradedStreak,
-      "\"__suspect\":" + suspectJson,
-      "\"__spread_hist\":" + spreadHistNew.mkString("[", ",", "]")) ++
-      floors.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v })
-      .mkString("{", ",", "}")
-    val movesJson = floorMoves.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // JVM memory/GC telemetry for the suite-position drift investigation
-    // (VERDICT r7 Next #2): cumulative GC work and peak metaspace/heap
-    // let an A/B over spark.sql.codegen.cache.maxEntries say whether a
-    // big codegen class cache raises late-suite memory pressure.
-    import scala.jdk.CollectionConverters._
-    val gcs = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-    val gcCount = gcs.map(_.getCollectionCount.max(0L)).sum
-    val gcSec = r3(gcs.map(_.getCollectionTime.max(0L)).sum / 1000.0)
-    def peakMb(pool: String): Long = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(_.getName.contains(pool))
-      .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
-      .foldLeft(0L)(_ + _) >> 20
-    val metaspaceMb = peakMb("Metaspace")
-    val heapMb = java.lang.management.ManagementFactory.getMemoryMXBean
-      .getHeapMemoryUsage.getUsed >> 20
-    val skp = skipped.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    val sentJson = sentinelRatios
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+        (prev.spreadHist :+ inSuiteSpreadMedian).takeRight(8)
+      else prev.spreadHist
     // RED-STATE contract (ADVICE r10 #1, the medium finding): in a
     // degraded window every would-be confirm downgrades to
     // suspect_window and floor_regressions reads 0 — and a GENUINE
@@ -1230,37 +808,452 @@ object Bench {
     //   through the sf/cpus-gated floor file — a uniform regression
     //   cannot hide behind "the window was slow" twice in a row without
     //   tripping it).
-    val redState = confirmedSet.nonEmpty ||
-      (windowDegraded && suspectSet.nonEmpty) || degradedStreak >= 2
+    val redState = verdicts.confirmed.nonEmpty ||
+      (windowDegraded && verdicts.suspectWindow.nonEmpty) ||
+      degradedStreak >= 2
+    Outcome(rawMoves, suiteDrift, probeDrift, probeMax, streamMedianRatio,
+      drifts, inSuiteSpreadMedian, spreadThreshold, sentinelRatios,
+      verdicts, floors, degradedStreak, spreadHist, rebaseApplied, redState)
+  }
+
+  // a sentinel's min-of-2 fresh ratio to its floor
+  private def sentinelRatio(name: String, prevFloors: Map[String, Double],
+      probe: (String, Int) => Seq[Double]): Option[Double] =
+    probe(name, 2).minOption.map(m => r2(m / prevFloors(name)))
+
+  /** The mover phase of [[adjudicate]], records in probe order. */
+  private[graft] def judgeMovers(d: Drifts, prevFloors: Map[String, Double],
+      rawMoves: Map[String, Double], suspects: Seq[String],
+      registry: Set[String], sentinels: Sentinels,
+      probe: (String, Int) => Seq[Double],
+      wallLeft: () => Boolean): Seq[Adjudication] = {
+    // CARRIED-SUSPECT RESOLUTION (VERDICT r14 Next #2): queries the
+    // previous official run flagged suspect_query are probed FIRST —
+    // before any mover adjudication — while the window is at its best.
+    // Resolution rule on suspectResolutionOf: cleared at <= 1.3x,
+    // re-pinned (floor := fresh.min, an upward move WITH recorded
+    // evidence) on a second consecutive tight >1.3x reading, deferred
+    // on a degraded window, dropped as loose noise otherwise.
+    val suspectEntries = suspects.filter(n =>
+        registry(n) && prevFloors.contains(n)).sorted.map { name =>
+      val prevF = prevFloors(name)
+      if (!wallLeft()) Adjudication(name, prevF, None, Nil, "suspect_deferred")
+      else {
+        val fresh = probe(name, if (prevF >= 3.0) 2 else 3)
+        if (fresh.isEmpty) Adjudication(name, prevF, None, Nil, "probe_error")
+        else {
+          val spread = fresh.max / fresh.min
+          val verdict =
+            suspectResolutionOf(fresh.min / prevF, spread, d.degraded)
+          Adjudication(name, prevF, None, fresh, verdict,
+            spread = Some(r2(spread)),
+            repinnedFloor =
+              if (verdict == "suspect_repinned") Some(r3(fresh.min)) else None)
+        }
+      }
+    }
+    // BREADTH-FIRST ADJUDICATION (VERDICT r13 Next #2): pass 1 gives
+    // EVERY raw mover one cheap probe in descending-ratio order before
+    // pass 2 escalates anyone — the r13 driver run ended with 69/79
+    // movers unadjudicated because depth-first full-rep probes on the
+    // headliners drained the wall budget before the tail was probed at
+    // all. Most movers on a noisy window clear on that single probe
+    // (fresh <= 1.5x floor — a fast rep is direct evidence; spikes
+    // inflate, never deflate), so breadth costs LESS than the old
+    // heavy-first min-of-2 on clean windows too.
+    // carried suspects already adjudicated above — they must not be
+    // probed twice through the mover path in the same window
+    val moverOrder = moverOrderOf(rawMoves).filterNot(suspects.toSet)
+    val breadthProbes: Map[String, Seq[Double]] = moverOrder.flatMap { n =>
+      if (wallLeft()) Some(n -> probe(n, 1)) else None }.toMap
+    // fresh sibling-class medians from the breadth pass itself
+    // (VERDICT r14 Next #3a): what fresh probes of each floor class
+    // cost RIGHT NOW, the contemporaneous complement of suite_drift
+    def floorClassOf(f: Double): String =
+      if (f < MicroCut) "micro" else if (f >= 3.0) "heavy" else "mid"
+    val classFreshMedians: Map[String, Option[Double]] = {
+      val ratios = breadthProbes.toSeq.collect {
+        case (n, ps) if ps.nonEmpty && prevFloors.get(n).exists(_ > 0) =>
+          floorClassOf(prevFloors(n)) -> ps.min / prevFloors(n)
+      }
+      Seq("micro", "mid", "heavy").map { c =>
+        c -> classFreshMedianOf(ratios.collect { case (`c`, r) => r })
+      }.toMap
+    }
+    // ESCALATION RESERVE (VERDICT r14 Next #3b): extra reps are spent
+    // on at most `escalationReserve` movers — the worst borderlines,
+    // first in moverOrder; the tail adjudicates on its breadth probe
+    // plus the class-fresh rule, so the wall can no longer starve
+    // exactly the cases escalation exists for.
+    var escalationsUsed = 0
+    val moverEntries = moverOrder.map { name =>
+      val ratio = Some(rawMoves(name))
+      val prevF = prevFloors(name)
+      val classFresh = classFreshMedians(floorClassOf(prevF))
+      breadthProbes.get(name) match {
+      case None =>
+        // wall guard hit before this mover's breadth probe
+        Adjudication(name, prevF, ratio, Nil, "unadjudicated_budget")
+      case Some(first)
+          if first.nonEmpty && first.min / prevF > 1.5 &&
+            classFreshClearOf(first.min / prevF, classFresh) =>
+        // CLASS-FRESH CLEAR (r14 Next #3a): the probe is > 1.5x floor
+        // but tracks its own class's contemporaneous fresh cost — the
+        // late-window ambient shape that left 7 movers unadjudicated
+        // in the r14 driver run. Cleared on the breadth probe alone.
+        Adjudication(name, prevF, ratio, first, "cleared_class_fresh",
+          classFreshMedian = classFresh)
+      case Some(first) =>
+        // pass 2: escalate only movers the breadth probe did not clear
+        // (heavy floors min-of-2 total, the rest median-of-3; a thrown
+        // breadth probe retries the full class count), within the
+        // escalation reserve
+        val extraWant = escalationWantOf(prevF, first)
+        val mayEscalate = escalationsUsed < escalationReserve
+        if (extraWant > 0 && mayEscalate) escalationsUsed += 1
+        val fresh = first ++ (if (extraWant > 0 && mayEscalate &&
+          wallLeft()) probe(name, extraWant) else Nil)
+        if (fresh.nonEmpty) {
+          val fr = fresh.min / prevF
+          val isMicro = prevF < MicroCut
+          val drift =
+            if (d.degraded && name.startsWith("q_stream_")) d.stream
+            else d.eff
+          // CONTEMPORANEOUS SENTINEL (r10 closing-run phantom: an
+          // untouched query confirmed at 2.0x whose quiet re-probe
+          // measured 1.24x — the phase-START sentinels were minutes
+          // stale by then). A tentative confirm triggers one sentinel
+          // re-probe RIGHT NOW — CLASS-MATCHED (r11 Next #2): a micro
+          // mover is vouched for by the micro sentinel, whose ratio
+          // moves with the same fixed-overhead ambient; if the
+          // sentinel itself reads drifted (> 1.25x its floor), the
+          // moment is slow, not the query. Cost is paid only on
+          // would-be confirms (rare).
+          lazy val confirmSentinelRatio: Option[Double] =
+            (if (isMicro) sentinels.micro else sentinels.mid)
+              .orElse(sentinels.all.headOption)
+              .flatMap(sentinelRatio(_, prevFloors, probe))
+          // suspect_window: a mover that beats every drift adjustment
+          // in a DEGRADED window is still not certifiable — the
+          // discriminator has already declared it cannot tell
+          // environment from code here. Reported on its own field; a
+          // real regression re-confirms in the next clean window
+          // (monotone floors guarantee the comparison survives).
+          val (verdict0, srOpt) = verdictOf(fr, fresh.min - prevF, isMicro,
+            drift, d.micro, d.degraded, AbsDeltaSec, confirmSentinelRatio)
+          // a regression is NEVER confirmed on 1-rep evidence (ADVICE
+          // r13): when the escalation was wall-blocked the single
+          // breadth probe stays on the record as unadjudicated — a
+          // one-off spike must not flip red_state
+          val verdict1 =
+            if (verdict0 == "confirmed_regression" && fresh.size < 2)
+              "unadjudicated_budget"
+            else verdict0
+          // SUSPECT-QUERY OVERRIDE (VERDICT r14 Next #2): an ambient
+          // verdict backed by TIGHT >1.5x fresh evidence on a clean
+          // window is a contradiction — consistent isolated reps are
+          // exactly what ambient noise cannot produce. Carried in the
+          // floor file and auto-probed first next window.
+          val verdict =
+            if ((verdict1 == "ambient_drift" ||
+                 verdict1 == "ambient_class_drift") &&
+                suspectQueryOf(fresh, prevF, d.degraded))
+              "suspect_query"
+            else verdict1
+          // LOWER median ((size-1)/2): with the heavy movers' 2-rep
+          // pool, size/2 would report the WORSE probe as "median"
+          // and overstate the mover's isolated cost in the evidence
+          Adjudication(name, prevF, ratio, fresh, verdict,
+            freshMedian = Some(r3(fresh.sorted.apply((fresh.size - 1) / 2))),
+            confirmSentinel = srOpt)
+        } else {
+          // a mover whose probes all threw is a FAILING query, not a
+          // perf regression — counted on its own stdout field
+          // (ADVICE r9 #4), never folded into floor_regressions
+          Adjudication(name, prevF, ratio, Nil, "probe_error")
+        }
+      }
+    }
+    suspectEntries ++ moverEntries
+  }
+
+  /** What the timed suite and the probes recorded. */
+  private[graft] case class Run(sfDir: String, cpus: String,
+      medians: Map[String, Double], failures: Seq[String],
+      skipped: Seq[String], flaky: Seq[(String, Int)],
+      repsUsed: Map[String, Int], spreads: Map[String, Double],
+      timeouts: Set[String], budgetHit: Boolean, repCutHit: Boolean,
+      wallHit: Boolean, wallSec: Double)
+  /** The contract line and the four (path, contents) written with it. */
+  private[graft] def render(run: Run, o: Outcome, official: Boolean,
+      floorPath: String): (String, Seq[(String, String)]) = {
+    import run._
+    val v = o.verdicts
+    val qs = medians.map { case (k, t) => k -> r3(t) }
+    val total = r3(medians.values.filter(_ >= 0).sum)
+    val carried = v.carried.toSeq.sorted
+    // CONFIRMED verdicts only on the contract line (VERDICT r9 Next
+    // #1a); ambient / probe_error / unadjudicated each get their own
+    // field. (Since the floor basis is in-suite-only now, probe reps no
+    // longer shrink floorsNow — the confirmed filter alone separates
+    // real movers from cleared ones.)
+    val floorMoves =
+      o.rawMoves.toSeq.filter(m => v.confirmed(m._1)).sortBy(-_._2)
+    val windowFields = Seq("suite_drift" -> o.suiteDrift,
+      "probe_drift" -> o.probeDrift, "probe_max" -> o.probeMax.getOrElse(-1.0),
+      "stream_drift" -> o.drifts.stream, "stream_median" -> o.streamMedian,
+      "micro_drift" -> o.drifts.micro, "micro_cut" -> MicroCut,
+      "abs_delta_sec" -> AbsDeltaSec, "sentinels" -> Obj(o.sentinels: _*),
+      "window_degraded" -> o.drifts.degraded, "degraded_streak" ->
+      o.degradedStreak, "red_state" -> o.redState, "floor_rebase" ->
+      o.rebaseApplied, "in_suite_spread_median" -> o.inSuiteSpreadMedian,
+      "spread_threshold" -> o.spreadThreshold)
     // VERDICT r15 Next #2: the printed line carries the per-query median
     // map (the driver's PERF per-query/scaling blocks read it from the
     // parsed line; bench_detail.json is not enough). The map is the same
     // `qs` serialized into bench_detail.json below — same medians, same
     // rounding. The full line is also persisted to bench_line.json so the
     // per-query evidence survives even if a stdout archive truncates it.
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_queries":${results.size},"skipped":${skipped.size},"floor_regressions":${confirmedSet.size},"suspect_window":${suspectSet.size},"suspect_query":${suspectQuerySet.size},"unadjudicated":${unadjSet.size},"probe_errors":${probeErrSet.size},"ambient_drift":${ambient.size},"floor_flagged_raw":${rawMoves.size},"query_timeouts":${timeoutSet.size},"suite_drift":$suiteDrift,"probe_drift":$probeDrift,"window_degraded":$windowDegraded,"degraded_streak":$degradedStreak,"red_state":$redState,"sf":"$sfDir"}"""
-    val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":"$cpus","queries":$qs,"errors":$errs,"skipped":$skp,"failed_reps":$flk,"reps":$reps,"reps_used":$ru,"spreads":$sp,"floor_regressions":$movesJson,"suspect_window":${suspectSet.size},"suspect_query":${suspectQuerySet.size},"suspect_carried":$suspectJson,"unadjudicated":${unadjSet.size},"probe_errors":${probeErrSet.size},"floor_flagged_raw":${rawMoves.size},"ambient_drift":${ambient.size},"suite_drift":$suiteDrift,"probe_drift":$probeDrift,"probe_max":${if (sentinelRatios.size >= 2) probeMaxRatio else -1.0},"stream_drift":$streamDrift,"stream_median":$streamMedianRatio,"micro_drift":$microDrift,"micro_cut":$microCut,"abs_delta_sec":$absDeltaSec,"sentinels":$sentJson,"window_degraded":$windowDegraded,"degraded_streak":$degradedStreak,"red_state":$redState,"floor_rebase":$rebaseApplied,"in_suite_spread_median":$inSuiteSpreadMedian,"spread_threshold":$spreadThreshold,"query_timeouts":${timeoutSet.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"query_timeout_sec":$queryTimeoutSec,"budget_hit":$budgetHit,"rep_cut_hit":$repCutHit,"wall_hit":$wallHit,"wall_sec":${r3(elapsed)},"codegen_cache":$cgCache,"gc_count":$gcCount,"gc_sec":$gcSec,"metaspace_peak_mb":$metaspaceMb,"heap_used_mb":$heapMb,"sf":"$sfDir"}"""
-    val evidence =
-      s"""{"__sf":"$sfDir","__cpus":"$cpus","threshold":1.5,"suite_drift":$suiteDrift,"probe_drift":$probeDrift,"probe_max":${if (sentinelRatios.size >= 2) probeMaxRatio else -1.0},"stream_drift":$streamDrift,"stream_median":$streamMedianRatio,"micro_drift":$microDrift,"micro_cut":$microCut,"abs_delta_sec":$absDeltaSec,"sentinels":$sentJson,"window_degraded":$windowDegraded,"degraded_streak":$degradedStreak,"red_state":$redState,"floor_rebase":$rebaseApplied,"in_suite_spread_median":$inSuiteSpreadMedian,"spread_threshold":$spreadThreshold,"raw_movers":${rawMoves.size},"confirmed":${confirmedSet.size},"suspect_window":${suspectSet.size},"suspect_query":${suspectQuerySet.size},"suspect_carried":$suspectJson,"ambient_drift":${ambient.size},"probe_errors":${probeErrSet.size},"unadjudicated":${unadjSet.size},"adjudications":[${adjudications.reverse.mkString(",")}]}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
-    catch { case _: Throwable => () }
+    val line = json(Obj("metric" -> "total", "value" -> total, "unit" ->
+      "sec", "queries" -> qs, "errors" -> failures, "n_queries" ->
+      medians.size, "skipped" -> skipped.size, "floor_regressions" ->
+      v.confirmed.size, "suspect_window" -> v.suspectWindow.size,
+      "suspect_query" -> v.suspectQuery.size, "unadjudicated" ->
+      v.unadjudicated.size, "probe_errors" -> v.probeErrors.size,
+      "ambient_drift" -> v.ambient.size, "floor_flagged_raw" ->
+      o.rawMoves.size, "query_timeouts" -> timeouts.size, "suite_drift" ->
+      o.suiteDrift, "probe_drift" -> o.probeDrift, "window_degraded" ->
+      o.drifts.degraded, "degraded_streak" -> o.degradedStreak,
+      "red_state" -> o.redState, "sf" -> sfDir))
+    // JVM memory/GC telemetry for the suite-position drift investigation
+    // (VERDICT r7 Next #2): cumulative GC work and peak metaspace/heap
+    // let an A/B over spark.sql.codegen.cache.maxEntries say whether a
+    // big codegen class cache raises late-suite memory pressure.
+    val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    def peakMb(pool: String): Long = ManagementFactory
+      .getMemoryPoolMXBeans.asScala
+      .filter(_.getName.contains(pool))
+      .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
+      .foldLeft(0L)(_ + _) >> 20
+    // reps used, noise spreads, flaky reps and wall time live in
+    // bench_detail.json, committed each round
+    val detail = json(Obj(Seq("metric" -> "total", "value" -> total,
+      "unit" -> "sec", "cpus" -> cpus, "queries" -> qs, "errors" -> failures,
+      "skipped" -> skipped, "failed_reps" -> Obj(flaky: _*), "reps" -> Reps,
+      "reps_used" -> repsUsed, "spreads" -> spreads, "floor_regressions" ->
+      Obj(floorMoves: _*), "suspect_window" -> v.suspectWindow.size,
+      "suspect_query" -> v.suspectQuery.size, "suspect_carried" -> carried,
+      "unadjudicated" -> v.unadjudicated.size, "probe_errors" ->
+      v.probeErrors.size, "floor_flagged_raw" -> o.rawMoves.size,
+      "ambient_drift" -> v.ambient.size) ++ windowFields ++ Seq(
+      "query_timeouts" -> timeouts.toSeq.sorted, "query_timeout_sec" ->
+      QueryTimeoutSec, "budget_hit" -> budgetHit, "rep_cut_hit" -> repCutHit,
+      "wall_hit" -> wallHit, "wall_sec" -> r3(wallSec), "codegen_cache" ->
+      CodegenCache, "gc_count" -> gcs.map(_.getCollectionCount.max(0L)).sum,
+      "gc_sec" -> r3(gcs.map(_.getCollectionTime.max(0L)).sum / 1000.0),
+      "metaspace_peak_mb" -> peakMb("Metaspace"), "heap_used_mb" ->
+      (ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20),
+      "sf" -> sfDir): _*))
     // per-mover adjudication verdicts (isolated fresh-probe reps +
     // cleared/confirmed), overwritten by each official run; the curated
     // per-round floor_evidence_r{N}.json starts from this file
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        if (official) "floor_evidence_auto.json"
-        else "floor_evidence_auto_dev.json"), evidence + "\n")
-    catch { case _: Throwable => () }
-    try java.nio.file.Files.writeString(floorPath, floorsJson + "\n")
-    catch { case _: Throwable => () }
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_line.json"), line + "\n")
-    catch { case _: Throwable => () }
+    val evidence = json(Obj(Seq("__sf" -> sfDir, "__cpus" -> cpus,
+      "threshold" -> 1.5) ++ windowFields ++ Seq("raw_movers" ->
+      o.rawMoves.size, "confirmed" -> v.confirmed.size, "suspect_window" ->
+      v.suspectWindow.size, "suspect_query" -> v.suspectQuery.size,
+      "suspect_carried" -> carried, "ambient_drift" -> v.ambient.size,
+      "probe_errors" -> v.probeErrors.size, "unadjudicated" ->
+      v.unadjudicated.size, "adjudications" -> v.entries.map(_.obj)): _*))
+    val floorFile = json(Obj(Seq("__sf" -> sfDir, "__cpus" -> cpus,
+      "__degraded_streak" -> o.degradedStreak, "__suspect" -> carried,
+      "__spread_hist" -> o.spreadHist) ++ o.floors.toSeq.sortBy(_._1): _*))
+    (line, Seq("bench_detail.json" -> detail, (if (official)
+      "floor_evidence_auto.json" else "floor_evidence_auto_dev.json") ->
+      evidence, floorPath -> floorFile, "bench_line.json" -> line))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(sfDir, cpus)
+    val benchT0 = System.nanoTime()
+    def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
+    // per-rep hang-breaker (rationale at QueryTimeoutSec): one measured
+    // rep = one job group + one daemon-timer cancellation
+    var timeoutSet = Set.empty[String]
+    val watchdogTimer = new java.util.Timer("bench-watchdog", true)
+    def measuredRep(name: String)(body: => Unit): Option[Double] = {
+      val group = s"bench-$name-${System.nanoTime()}"
+      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = false)
+      @volatile var fired = false
+      val task = new java.util.TimerTask {
+        def run(): Unit = {
+          fired = true
+          try spark.sparkContext.cancelJobGroup(group)
+          catch { case NonFatal(_) => () }
+        }
+      }
+      watchdogTimer.schedule(task, (QueryTimeoutSec * 1000).toLong)
+      val t0 = System.nanoTime()
+      val r =
+        try { body; Some((System.nanoTime() - t0) / 1e9) }
+        catch { case NonFatal(_) =>
+          // attribution needs BOTH signals (ADVICE r13): a rep that
+          // throws for an unrelated reason just as the timer fires
+          // would otherwise be misrecorded as a timeout; a genuine
+          // cancellation cannot surface before the timeout elapsed
+          if (fired && (System.nanoTime() - t0) / 1e9 >= QueryTimeoutSec)
+            timeoutSet += name
+          None
+        }
+      task.cancel()
+      try spark.sparkContext.clearJobGroup() catch { case NonFatal(_) => () }
+      r
+    }
+    // Read BEFORE the measurement loop since the GC-before-heavy
+    // policy below keys off the previous round's floors.
+    val official = new java.io.File(sfDir).getName == "sf0.1" && cpus == "32"
+    val floorPath =
+      if (official) "bench_floor.json" else "bench_floor_dev.json"
+    val prev = FloorFile.read(Paths.get(floorPath), sfDir, cpus)
+    val prevFloors = prev.floors
+    // GC-BEFORE-HEAVY keying, part 2 (VERDICT r10 Next #3): floor >= 3s
+    // alone missed q_jaccard_prefix — floor 1.96s but in-suite 7.5x vs
+    // isolated 1.4x, exactly the reclaimable-garbage signature the GC
+    // was shown to remove for q_triangles. The previous round's OBSERVED
+    // spread (max/min over reps) is direct evidence of suite-context
+    // noise on that query, so spread >= 3.0 keys the GC too (22 queries
+    // at the r10 detail — a handful of collections, not a policy shift).
+    // Read from the previous round's committed bench_detail.json, gated
+    // like the floor file (dev smokes write the same file).
+    val prevSpreads: Map[String, Double] =
+      readJson(Paths.get("bench_detail.json")) { j =>
+        if (sameConfig(j, "sf", "cpus", sfDir, cpus))
+          queryNumbers(j.path("spreads"))
+        else Map.empty[String, Double]
+      }.getOrElse(Map.empty)
+    var failures = List.empty[String]
+    var flaky = List.empty[(String, Int)] // partial rep failures, kept visible
+    var budgetHit = false  // measured time passed BudgetSec
+    var repCutHit = false  // extra reps stopped at 0.6x budget (ADVICE r10 #4)
+    var wallHit = false
+    var skipped = List.empty[String] // wall-guard casualties, NOT errors
+    // per-query (reps_used, max/min spread): this VM shows 3-40x
+    // single-run noise spikes even on quiet runs (r4: q_rollup 43s
+    // in-suite vs 0.97s isolated), so the artifact itself must say how
+    // trustworthy each number is — spread ~1 means believe it, spread
+    // >> 1 means the median/min absorbed a spike
+    var repsUsed = Map.empty[String, Int]
+    var spreads = Map.empty[String, Double]
+    var perQueryTimes = Map.empty[String, List[Double]]
+    // floor basis: IN-SUITE reps only (composeFloors part 1) — probe
+    // reps still join perQueryTimes for reps_used/spreads evidence but
+    // can no longer drag a floor below cold-rep reach
+    var inSuiteTimes = Map.empty[String, List[Double]]
+    val results = SparkEntry.queries.flatMap { case (name, _) =>
+      // GC-BEFORE-HEAVY (r9 experiment, PerfProbe SPARK_GRAFT_PROBE_GC):
+      // the recurring ~1.4x "suite-context factor" on the suite's
+      // heaviest shuffle is RECLAIMABLE garbage, not live residency —
+      // running q_triangles after the heavy graph/PCA family measured
+      // median 11.18s, and an identical run with System.gc() before
+      // each rep measured 7.65s, equal to its 7.63s isolated median
+      // (other heavies unchanged). A GC before each rep of queries
+      // whose PREVIOUS floor is >= 3s costs a handful of collections
+      // per suite and removes that factor at its source; r11 adds the
+      // observed-spread key (see prevSpreads above) so sub-3s queries
+      // with measured suite-context noise get the same treatment.
+      val gcFirst = prevFloors.get(name).exists(_ >= 3.0) ||
+        prevSpreads.get(name).exists(_ >= 3.0)
+      def runOnce(): Option[Double] = {
+        if (gcFirst) System.gc()
+        rep(spark, sfDir, name)(measuredRep(name))
+      }
+      if (elapsed > WallGuardSec) {
+        // WALL GUARD: in a window so degraded that even single reps
+        // overran the guard, stop measuring — a partial per-query map
+        // plus an emitted contract line beats the r3 rc=124 (no number
+        // at all). Skipped queries are reported separately from errors.
+        wallHit = true; skipped ::= name; None
+      } else {
+        val first = runOnce()
+        val extraReps = first match {
+          case None => Reps - 1 // crashed: retry up to the full rep count
+          case Some(_) if name.startsWith("q_stream_") => 0
+          case Some(t) if t < FastCut => 0
+          case Some(t) if t >= HeavyCut => 1
+          case Some(_) => Reps - 1
+        }
+        // extra reps stop at RepCutSec (not BudgetSec): a 2x-slow window
+        // must still leave adjudication headroom under the wall guard.
+        // rep_cut_hit records THAT event; budget_hit means "measured
+        // time passed BudgetSec". SEMANTIC BREAK (ADVICE r11 #1): in
+        // r10-era detail files budget_hit fired at 0.6x budget — the
+        // condition rep_cut_hit records today — so budget_hit is NOT
+        // comparable across the r10/r11 boundary (an r11+ file can read
+        // budget_hit=false/rep_cut_hit=true where r10 wrote
+        // budget_hit=true). Compare rep_cut_hit(r11+) to budget_hit(r10)
+        // RESERVED ADJUDICATION BUDGET (VERDICT r13 Next #2): between
+        // RepSoftCutSec (0.45x budget) and RepCutSec, median-of-3
+        // queries degrade to 2 reps — on a slow window the saving is
+        // banked for the post-suite probe phase, which on the r13
+        // driver run got NOTHING because the suite ate the whole wall
+        // (69/79 movers unadjudicated). Clean windows finish the suite
+        // phase under ~0.45x budget and never hit this.
+        val wanted = if (elapsed > RepCutSec) { repCutHit = true; 0 }
+          else if (elapsed > RepSoftCutSec) math.min(extraReps, 1)
+          else extraReps
+        if (elapsed > BudgetSec) budgetHit = true
+        val times = first.toList ++ (1 to wanted).flatMap(_ => runOnce())
+        val attempts = 1 + wanted
+        if (times.isEmpty) { failures ::= name; Some(name -> -1.0) }
+        else {
+          // a query that crashed on SOME reps must not look healthy
+          if (times.size < attempts) flaky ::= (name, attempts - times.size)
+          repsUsed += name -> times.size
+          perQueryTimes += name -> times.toList
+          inSuiteTimes += name -> times.toList
+          if (times.size >= 2)
+            spreads += name -> (math.round(times.max / times.min * 100) / 100.0)
+          val t =
+            if (first.exists(_ >= HeavyCut) && times.size == 2) times.min
+            else times.sorted.apply(times.size / 2)
+          Some(name -> t)
+        }
+      }
+    }
+    // run one query fresh (GC + cleanup), recording samples in the pool
+    def freshProbe(name: String, want: Int): Seq[Double] = {
+      System.gc()
+      val fresh = (1 to want).flatMap(_ => rep(spark, sfDir, name)(measuredRep(name)))
+      if (fresh.nonEmpty) {
+        perQueryTimes += name ->
+          (fresh.toList ++ perQueryTimes.getOrElse(name, Nil))
+        repsUsed += name -> perQueryTimes(name).size
+        val ts = perQueryTimes(name)
+        spreads += name -> (math.round(ts.max / ts.min * 100) / 100.0)
+      }
+      fresh
+    }
+    val o = adjudicate(inSuiteTimes, prev, SparkEntry.queries.keySet,
+      official, failures.size, wallHit,
+      official && sys.env.get("SPARK_GRAFT_FLOOR_REBASE").contains("1"),
+      freshProbe, () => elapsed < WallGuardSec)
+    // STDOUT gets ONE JSON line (the driver's contract:
+    // metric/value/unit/queries/sf + adjudication fields), mirrored to
+    // bench_line.json in case a stdout archive truncates. A failed write
+    // (the floor file among them: this round's floors and suspects) is
+    // reported after the line and fails the run. Rendered AFTER the
+    // confirm pass so reps_used/spreads include its runs.
+    val (line, files) = render(Run(sfDir, cpus, results, failures, skipped,
+      flaky, repsUsed, spreads, timeoutSet, budgetHit, repCutHit, wallHit,
+      elapsed), o, official, floorPath)
+    val failedWrites = files.flatMap { case (path, txt) =>
+      try { Files.writeString(Paths.get(path), txt + "\n"); None }
+      catch { case NonFatal(e) => Some(s"$path: $e") }
+    }
     println(line)
+    failedWrites.foreach(f => System.err.println(s"[bench] write failed: $f"))
     spark.stop()
+    if (failedWrites.nonEmpty) sys.exit(1)
   }
 }

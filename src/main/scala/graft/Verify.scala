@@ -123,7 +123,7 @@ object Verify {
     kv.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
 
-  private def jsonString(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

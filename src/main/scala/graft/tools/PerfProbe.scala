@@ -1,42 +1,25 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
-/** Bench-faithful single-query timing: noop sink, median of N reps,
-  * clearCache between reps (same protocol as graft.Bench, so numbers are
-  * comparable to BENCH_r*.json entries). Usage: PerfProbe <sfDir> <q>... */
+/** Bench-faithful single-query timing: Bench's session and rep (noop
+  * sink, then the SQL cache and persistent RDD blocks released), median
+  * of `Bench.Reps` reps, so numbers are comparable to BENCH_r*.json
+  * entries. Usage: PerfProbe <sfDir> <q>... */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "1000") // match Bench (r8 A/B)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try spark.read.parquet(s"${args(0)}/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => () }
+    val spark = graft.Bench.session(args(0), cpus)
     // SPARK_GRAFT_PROBE_GC=1: System.gc() before each rep — the
     // suite-context-factor experiment (r9): does reclaiming JVM
     // residency between queries recover isolated-level times?
     val gcBetween = sys.env.get("SPARK_GRAFT_PROBE_GC").contains("1")
     args.drop(1).foreach { n =>
-      val times = (1 to reps).map { _ =>
+      val times = (1 to graft.Bench.Reps).flatMap { _ =>
         if (gcBetween) System.gc()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(n)(spark, args(0))
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // full Bench cleanup parity: clear the SQL cache AND persistent
-        // RDD blocks (localCheckpoints) — without the latter, probe reps
-        // of checkpoint-heavy faces measure under growing memory
-        // pressure the real bench never has
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
-        try spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        catch { case _: Throwable => () }
-        dt
+        graft.Bench.rep(spark, args(0), n) { body =>
+          val t0 = System.nanoTime()
+          body
+          Some((System.nanoTime() - t0) / 1e9)
+        }
       }
       println(f"[perf] $n median=${times.sorted.apply(times.size / 2)}%.2fs all=${times.map(t => f"$t%.2f").mkString(",")}")
     }

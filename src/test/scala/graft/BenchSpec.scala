@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the pure mover-verdict rule (Bench.verdictOf) — in particular
@@ -342,5 +344,127 @@ class BenchSpec extends AnyFunSuite {
     val back = new com.fasterxml.jackson.databind.ObjectMapper()
       .readValue(json, classOf[java.util.Map[String, String]])
     assert(back.get("k") == tricky)
+  }
+
+  // ---- the floor file, the artifacts and the extracted adjudication --
+
+  private def floorOf(txt: String, sf: String, cpus: String) =
+    Bench.FloorFile.parse(new ObjectMapper().readTree(txt), sf, cpus)
+
+  private val floorTxt = """{"__sf":"/d/sf0.1","__cpus":"32",""" +
+    """"__degraded_streak":2,"__suspect":["q_b","q_b"],""" +
+    """"__spread_hist":[1.4,1.5],"q_a":0.5,"q_b":1.25}"""
+
+  test("FloorFile: a file of another scale factor reads as empty") {
+    assert(floorOf(floorTxt, "/d/sf0.01", "32") ==
+      Bench.FloorFile.empty)
+    assert(floorOf(floorTxt, "/d/sf0.1", "32") ==
+      Bench.FloorFile(Map("q_a" -> 0.5, "q_b" -> 1.25), 2, Seq("q_b"),
+        Seq(1.4, 1.5)))
+  }
+
+  test("FloorFile: a file of another cpu count reads as empty") {
+    assert(floorOf(floorTxt, "/d/sf0.1", "4") ==
+      Bench.FloorFile.empty)
+  }
+
+  test("FloorFile: a file with no __cpus counts as the official 32") {
+    val old = """{"__sf":"/d/sf0.1","q_a":0.5}"""
+    assert(floorOf(old, "/d/sf0.1", "32").floors ==
+      Map("q_a" -> 0.5))
+    assert(floorOf(old, "/d/sf0.1", "4") ==
+      Bench.FloorFile.empty)
+  }
+
+  test("FloorFile: a file with no __suspect or __spread_hist gives empty " +
+      "lists") {
+    val old = """{"__sf":"/d/sf0.1","__cpus":"32","__degraded_streak":1,""" +
+      """"q_a":0.5}"""
+    assert(floorOf(old, "/d/sf0.1", "32") ==
+      Bench.FloorFile(Map("q_a" -> 0.5), 1, Nil, Nil))
+  }
+
+  test("the contract line, detail, evidence and floor file are valid " +
+      "JSON when the sf path holds a quote and a backslash") {
+    val sf = "/d/a\"b\\c/sf0.01"
+    // q_a moved 2x in-suite against a 0.5 floor; its probe clears it
+    val o = Bench.adjudicate(Map("q_a" -> Seq(1.0, 1.3)),
+      Bench.FloorFile(Map("q_a" -> 0.5), 0, Nil, Nil), Set("q_a"),
+      official = false, errors = 0, wallHit = false,
+      rebaseRequested = false, (_, _) => Seq(0.6), () => true)
+    assert(o.verdicts.entries.map(_.verdict) == Seq("cleared_noise"))
+    val run = Bench.Run(sf, "4", Map("q_a" -> 1.0), Nil, Nil, Nil,
+      Map("q_a" -> 3), Map("q_a" -> 1.3), Set.empty, budgetHit = false,
+      repCutHit = false, wallHit = false, wallSec = 2.0)
+    val (line, files) = Bench.render(run, o, official = false,
+      "bench_floor_dev.json")
+    val mapper = new ObjectMapper()
+    val parsed = (files.map(_._2) :+ line).map(mapper.readTree)
+    assert(parsed.map(j => Option(j.get("sf")).getOrElse(j.get("__sf"))
+      .asText).distinct == Seq(sf))
+    assert(parsed(1).get("adjudications").get(0).get("verdict").asText ==
+      "cleared_noise")
+    // the floor file reads back through its own gate
+    assert(floorOf(files(2)._2, sf, "4").floors ==
+      Map("q_a" -> 0.5))
+  }
+
+  test("adjudicate: a carried suspect is probed first and re-pinned on " +
+      "tight >1.3x reps, or deferred and carried again past the wall") {
+    val prev = Bench.FloorFile(Map("q_s" -> 1.0), 0, Seq("q_s"), Nil)
+    def run(wallLeft: Boolean) = Bench.adjudicate(Map("q_s" -> Seq(1.0)),
+      prev, Set("q_s"), official = false, errors = 0, wallHit = false,
+      rebaseRequested = false, (_, _) => Seq(1.5, 1.55, 1.6),
+      () => wallLeft)
+    val repinned = run(wallLeft = true)
+    assert(repinned.verdicts.entries.map(_.verdict) == Seq("suspect_repinned"))
+    assert(repinned.floors == Map("q_s" -> 1.5))
+    assert(repinned.verdicts.carried.isEmpty)
+    val deferred = run(wallLeft = false)
+    assert(deferred.verdicts.carried == Set("q_s"))
+    assert(deferred.floors == Map("q_s" -> 1.0))
+  }
+
+  test("replay: the 110 adjudications recorded under the current verdict " +
+      "rules reproduce through judgeMovers, except q_salted_agg (its " +
+      "evidence rounds reps to 3 decimals, and 1.102/0.468 = 2.3547 sits " +
+      "within rounding of its class-fresh bound 1.5 x 1.57 = 2.355)") {
+    // floor_evidence_r15.json predates these rules (no spread_threshold
+    // or suspect_query keys) and is left out
+    val mapper = new ObjectMapper()
+    val replayed = Seq("floor_evidence_auto.json",
+        "floor_evidence_r16_rebase.json").flatMap { f =>
+      val ev = mapper.readTree(new java.io.File(f))
+      def num(k: String) = ev.get(k).asDouble
+      val recorded = ev.get("adjudications").asScala.toSeq
+      def byQuery[T](v: com.fasterxml.jackson.databind.JsonNode => T) =
+        recorded.map(a => a.get("query").asText -> v(a)).toMap
+      val reps = byQuery(_.get("fresh_reps").asScala.map(_.asDouble).toSeq)
+      // the breadth probe returns the first recorded rep, an escalation
+      // the rest; each call's rep count is kept to compare
+      var calls = Map.empty[String, Seq[Int]]
+      val probe = (n: String, want: Int) => {
+        val before = calls.getOrElse(n, Nil)
+        calls += n -> (before :+ want)
+        if (before.isEmpty) reps(n).take(1) else reps(n).drop(1)
+      }
+      val drifts = Bench.Drifts(math.max(num("suite_drift"),
+        num("probe_drift")), num("stream_drift"), num("micro_drift"),
+        ev.get("window_degraded").asBoolean)
+      val got = Bench.judgeMovers(drifts,
+        byQuery(_.get("prev_floor").asDouble),
+        byQuery(_.get("in_suite_ratio").asDouble), Nil, reps.keySet,
+        Bench.Sentinels(None, None, None, None), probe, () => true)
+      assert(got.map(_.query) == recorded.map(_.get("query").asText))
+      got.zip(recorded).map { case (g, r) =>
+        val n = g.query
+        val sameCalls = calls(n) ==
+          (1 +: (if (reps(n).size > 1) Seq(reps(n).size - 1) else Nil))
+        n -> (sameCalls &&
+          mapper.readTree(Bench.json(g.obj)).toString == r.toString)
+      }
+    }
+    assert(replayed.size == 110)
+    assert(replayed.collect { case (n, false) => n } == Seq("q_salted_agg"))
   }
 }
