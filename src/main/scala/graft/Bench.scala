@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main. Prints ONE JSON line with the per-query medians and
   * the suite total on `SPARK_GRAFT_SF_DIR`.
@@ -85,9 +85,10 @@ object Bench {
   }
 
   /** Pure window-degraded rule (r12 post-close calibration, evidence in
-    * floor_evidence_r12.json "post_close_floor_pinning_attempts"): the
-    * two drift estimates DISAGREEING is information. suite_drift
-    * measures in-suite medians against best-ever floors — which include
+    * "post_close_floor_pinning_attempts" of floor_evidence_r12.json,
+    * in git history at 95b9d8c): the two drift estimates DISAGREEING
+    * is information. suite_drift measures in-suite medians against
+    * best-ever floors — which include
     * warm adjudication-probe reps (codegen-cache hits on a GC'd heap)
     * and so ratchet below what cold first-reps can reach late in VM
     * life — while probe_drift measures the machine RIGHT NOW under the
@@ -137,10 +138,10 @@ object Bench {
     * fixed-overhead-dominated: a HEALTHY sf0.01 window reads 1.8-1.9
     * (the multi-rep population there is 1-2s queries whose reps vary
     * by JIT/codegen scheduling, not machine state — measured r14,
-    * floor_evidence_r14.json rehearsal), so feeding the raw median
-    * would false-positive every dev run, block dev first pins, and
-    * inflate the dev degraded streak. Dev windows keep the r12
-    * sentinel-based rule (the neutral 1.0 disarms only the spread
+    * floor_evidence_r14.json rehearsal, in git history at 95b9d8c), so
+    * feeding the raw median would false-positive every dev run, block
+    * dev first pins, and inflate the dev degraded streak. Dev windows
+    * keep the r12 sentinel-based rule (the neutral 1.0 disarms only the spread
     * clause of [[windowDegradedOf]]). */
   private[graft] def spreadEvidenceOf(official: Boolean,
       inSuiteSpreadMedian: Double): Double =
@@ -388,10 +389,10 @@ object Bench {
   // generous 10x+ over the heaviest in-suite floor (~12s at sf0.1):
   // purely a hang-breaker, never a perf judgment
   private val QueryTimeoutSec = 180.0
-  // r8 A/B (bench_ab_r8.json): 1000 beats 5000 at local[32] — 12%
-  // faster suite, 0.9 GB less residual heap, q_triangles 8.6 vs 11.9s
-  // in-suite — while still avoiding the r6 100-entry thrash
-  // (q_incremental_dedup holds 1.12s). Retained generated classes are
+  // r8 A/B (bench_ab_r8.json, in git history at 95b9d8c): 1000 beats
+  // 5000 at local[32] — 12% faster suite, 0.9 GB less residual heap,
+  // q_triangles 8.6 vs 11.9s in-suite — while still avoiding the r6
+  // 100-entry thrash (q_incremental_dedup holds 1.12s). Retained generated classes are
   // HEAP residency that shrinks the unified execution-memory share,
   // and at 32 concurrent tasks the heaviest shuffles spill first.
   private val CodegenCache = 1000
@@ -401,7 +402,7 @@ object Bench {
   private def median2(xs: Seq[Double]): Option[Double] =
     if (xs.isEmpty) None else { val s = xs.sorted; Some(r2(s(s.size / 2))) }
 
-  /** Bench's session, shared with tools.PerfProbe. The warm-up query
+  /** Bench's session, shared with the tools. The warm-up query
     * keeps session startup (~3s of noise) out of the first rep. */
   private[graft] def session(sfDir: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -423,23 +424,27 @@ object Bench {
     spark
   }
 
-  /** One rep of face `name` (also tools.PerfProbe's): `measure` times
-    * the noop-sink write, then the SQL cache AND persistent RDD blocks
-    * (localCheckpoints are the latter) are released so later queries
+  /** One rep of face builder `build` (also the tools' reps): `measure`
+    * times the noop-sink write, then [[release]] runs so later queries
     * aren't measured under memory pressure. */
-  private[graft] def rep(spark: SparkSession, sfDir: String, name: String)(
+  private[graft] def rep(spark: SparkSession, sfDir: String,
+      build: (SparkSession, String) => DataFrame)(
       measure: (=> Unit) => Option[Double]): Option[Double] = {
-    val fn = SparkEntry.queries(name)
     // noop write forces evaluation of EVERY output column —
     // count() would let Catalyst prune the projections under test
     val dt = measure {
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      build(spark, sfDir).write.format("noop").mode("overwrite").save()
     }
+    release(spark)
+    dt
+  }
+  /** Releases the SQL cache AND persistent RDD blocks (localCheckpoints
+    * are the latter). */
+  private[graft] def release(spark: SparkSession): Unit = {
     try spark.catalog.clearCache() catch { case NonFatal(_) => () }
     try spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     catch { case NonFatal(_) => () }
-    dt
   }
   /** A JSON object in field order; None fields are left out. */
   private[graft] final case class Obj(fields: (String, Any)*)
@@ -487,10 +492,9 @@ object Bench {
     * sf+cpus (a file of another configuration reads as empty). Besides
     * the floors it carries the consecutive degraded-window closes for
     * the red-state contract (ADVICE r10 #1) — persisted here, not in
-    * bench_detail.json: the detail file is overwritten by every dev
-    * smoke at any sf, so a mid-round dev run would silently reset the
-    * streak; the floor file is already sf/cpus-gated and only the
-    * matching-configuration run rewrites it — plus, by the same owner
+    * the detail file: a dev detail file is overwritten by dev runs at
+    * every sf and cpu count; the floor file is sf/cpus-gated and only
+    * the matching-configuration run rewrites it — plus, by the same owner
     * rule, the carried suspect_query list and the clean-window spread
     * history. Absent keys (pre-r11/r15 files) read 0 / empty. */
   private[graft] case class FloorFile(floors: Map[String, Double],
@@ -984,9 +988,14 @@ object Bench {
       repsUsed: Map[String, Int], spreads: Map[String, Double],
       timeouts: Set[String], budgetHit: Boolean, repCutHit: Boolean,
       wallHit: Boolean, wallSec: Double)
+  /** An artifact's file name: `<stem>.json` for the official
+    * configuration, `<stem>_dev.json` for any other, so a dev run neither
+    * overwrites nor is read as an official one. */
+  private[graft] def artifact(stem: String, official: Boolean): String =
+    if (official) s"$stem.json" else s"${stem}_dev.json"
   /** The contract line and the four (path, contents) written with it. */
-  private[graft] def render(run: Run, o: Outcome, official: Boolean,
-      floorPath: String): (String, Seq[(String, String)]) = {
+  private[graft] def render(run: Run, o: Outcome, official: Boolean)
+      : (String, Seq[(String, String)]) = {
     import run._
     val v = o.verdicts
     val qs = medians.map { case (k, t) => k -> r3(t) }
@@ -1067,9 +1076,10 @@ object Bench {
     val floorFile = json(Obj(Seq("__sf" -> sfDir, "__cpus" -> cpus,
       "__degraded_streak" -> o.degradedStreak, "__suspect" -> carried,
       "__spread_hist" -> o.spreadHist) ++ o.floors.toSeq.sortBy(_._1): _*))
-    (line, Seq("bench_detail.json" -> detail, (if (official)
-      "floor_evidence_auto.json" else "floor_evidence_auto_dev.json") ->
-      evidence, floorPath -> floorFile, "bench_line.json" -> line))
+    (line, Seq(artifact("bench_detail", official) -> detail,
+      artifact("floor_evidence_auto", official) -> evidence,
+      artifact("bench_floor", official) -> floorFile,
+      artifact("bench_line", official) -> line))
   }
 
   def main(args: Array[String]): Unit = {
@@ -1113,9 +1123,8 @@ object Bench {
     // Read BEFORE the measurement loop since the GC-before-heavy
     // policy below keys off the previous round's floors.
     val official = new java.io.File(sfDir).getName == "sf0.1" && cpus == "32"
-    val floorPath =
-      if (official) "bench_floor.json" else "bench_floor_dev.json"
-    val prev = FloorFile.read(Paths.get(floorPath), sfDir, cpus)
+    val prev = FloorFile.read(Paths.get(artifact("bench_floor", official)),
+      sfDir, cpus)
     val prevFloors = prev.floors
     // GC-BEFORE-HEAVY keying, part 2 (VERDICT r10 Next #3): floor >= 3s
     // alone missed q_jaccard_prefix — floor 1.96s but in-suite 7.5x vs
@@ -1124,10 +1133,11 @@ object Bench {
     // spread (max/min over reps) is direct evidence of suite-context
     // noise on that query, so spread >= 3.0 keys the GC too (22 queries
     // at the r10 detail — a handful of collections, not a policy shift).
-    // Read from the previous round's committed bench_detail.json, gated
-    // like the floor file (dev smokes write the same file).
+    // Read from the previous run's detail file of the same kind (official
+    // or dev), gated like the floor file (dev runs at other sf or cpus
+    // write the same dev file).
     val prevSpreads: Map[String, Double] =
-      readJson(Paths.get("bench_detail.json")) { j =>
+      readJson(Paths.get(artifact("bench_detail", official))) { j =>
         if (sameConfig(j, "sf", "cpus", sfDir, cpus))
           queryNumbers(j.path("spreads"))
         else Map.empty[String, Double]
@@ -1166,7 +1176,7 @@ object Bench {
         prevSpreads.get(name).exists(_ >= 3.0)
       def runOnce(): Option[Double] = {
         if (gcFirst) System.gc()
-        rep(spark, sfDir, name)(measuredRep(name))
+        rep(spark, sfDir, SparkEntry.queries(name))(measuredRep(name))
       }
       if (elapsed > WallGuardSec) {
         // WALL GUARD: in a window so degraded that even single reps
@@ -1224,7 +1234,8 @@ object Bench {
     // run one query fresh (GC + cleanup), recording samples in the pool
     def freshProbe(name: String, want: Int): Seq[Double] = {
       System.gc()
-      val fresh = (1 to want).flatMap(_ => rep(spark, sfDir, name)(measuredRep(name)))
+      val fresh = (1 to want).flatMap(_ =>
+        rep(spark, sfDir, SparkEntry.queries(name))(measuredRep(name)))
       if (fresh.nonEmpty) {
         perQueryTimes += name ->
           (fresh.toList ++ perQueryTimes.getOrElse(name, Nil))
@@ -1246,7 +1257,7 @@ object Bench {
     // confirm pass so reps_used/spreads include its runs.
     val (line, files) = render(Run(sfDir, cpus, results, failures, skipped,
       flaky, repsUsed, spreads, timeoutSet, budgetHit, repCutHit, wallHit,
-      elapsed), o, official, floorPath)
+      elapsed), o, official)
     val failedWrites = files.flatMap { case (path, txt) =>
       try { Files.writeString(Paths.get(path), txt + "\n"); None }
       catch { case NonFatal(e) => Some(s"$path: $e") }

@@ -116,10 +116,11 @@ object Queries {
   }
 
   /** q_profile's HLL-sketch twin — NOT in the registry (no SQL oracle
-    * can mirror Spark's HLL++), timed by ScaleBench only, as the
-    * measured evidence that the approx path's slope stays ~volume while
-    * exact q_profile tracks distinct growth (11.8x at 10x). Same frame,
-    * same columns, exact = false. */
+    * can mirror Spark's HLL++). tools.ScaleBench times it as its one
+    * probe-only face, the measured evidence that the approx path's slope
+    * stays ~volume while exact q_profile tracks distinct growth (11.8x
+    * at 10x in the r8 run, SCALE.md). Same frame, same columns,
+    * exact = false. */
   private[graft] def qProfileApprox(s: SparkSession, dir: String): DataFrame = {
     val profs = Profiler.profile(dirty(s, dir)
       .select("qty", "price", "flag", "ship_str"), exact = false,

@@ -6990,7 +6990,8 @@ object QueriesExt {
     * and pins ok = TRUE — a sketch that leaves its documented
     * 0.01 %-rank window fails the hash gate instead of hiding behind
     * a rows-only check. Pure-approx timing evidence lives in SCALE.md
-    * (the r8 exact-vs-approx pair) and ScaleBench. */
+    * (the r8 exact-vs-approx pair); tools.ScaleBench times this face
+    * at 1x and 10x. */
   private def qQuantilePanelApprox(s: SparkSession, dir: String): DataFrame =
     profile.NumericProfile.quantilePanelBounded(docs(s, dir), "n_chars", "lang")
   /** Shared bounded-window oracle builder: the exact grid + cumulative

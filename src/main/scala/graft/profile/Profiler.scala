@@ -97,8 +97,8 @@ object Profiler {
     * distinct counts to the HLL sketch. The exact path's shuffle volume
     * is the table's distinct (column, value) pairs — the
     * information-theoretic minimum but still LINEAR in distinct growth
-    * (ScaleBench measured q_profile's 10x slope at 11.8x, tracked to
-    * distinct-value growth); the sketch path's exchange is a fixed-size
+    * (the r8 ScaleBench run measured q_profile's 10x slope at 11.8x,
+    * tracked to distinct-value growth); the sketch path's exchange is a fixed-size
     * HLL per column per partition, cost independent of cardinality. At
     * 1e7 rows the exact shuffle is comfortably in-memory on any
     * executor; beyond it the estimate (rsd ~2%) is the sane default and

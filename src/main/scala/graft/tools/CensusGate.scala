@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CensusGate {
   private val tracked = Seq("exchanges", "smj", "cartesian", "bnl")
-  private val noted = Seq("broadcasts", "wgl", "topk", "wscg")
+  private val noted = Seq("broadcasts", "wgl", "topk")
 
   /** Pure diff rule, pinned by CensusGateSpec. Returns (violations,
     * notes): violations non-empty = gate red. */
@@ -112,8 +112,9 @@ object CensusGate {
       q -> counts
     }.filter(_._1.nonEmpty).toMap
 
-  /** One face's census counts — the same regex census as PlanCensus
-    * (kept in sync; PlanCensus remains the human-readable report). */
+  /** One face's census counts, read from the plan before execution
+    * (so no `WholeStageCodegen` count: the initial adaptive plan has no
+    * codegen stages yet). */
   private def countsOf(spark: SparkSession, dir: String, n: String)
       : Map[String, Int] =
     try {
@@ -127,8 +128,7 @@ object CensusGate {
         "cartesian" -> c("CartesianProduct"),
         "bnl" -> c("BroadcastNestedLoopJoin"),
         "wgl" -> c("WindowGroupLimit"),
-        "topk" -> c("TakeOrderedAndProject"),
-        "wscg" -> c("WholeStageCodegen"))
+        "topk" -> c("TakeOrderedAndProject"))
     } catch {
       case scala.util.control.NonFatal(_) => Map("error" -> 1)
     }
@@ -139,17 +139,12 @@ object CensusGate {
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val censusPath = java.nio.file.Paths.get(
       rest.drop(1).headOption.getOrElse("plan_census.json"))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session(dir, "8")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     val current: Map[String, Map[String, Int]] = names.map { n =>
       val cs = countsOf(spark, dir, n)
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
+      // faces pin relations while building; 286 builds must not pile up
+      graft.Bench.release(spark)
       n -> cs
     }.toMap
     spark.stop()

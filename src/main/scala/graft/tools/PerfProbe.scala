@@ -15,7 +15,7 @@ object PerfProbe {
     args.drop(1).foreach { n =>
       val times = (1 to graft.Bench.Reps).flatMap { _ =>
         if (gcBetween) System.gc()
-        graft.Bench.rep(spark, args(0), n) { body =>
+        graft.Bench.rep(spark, args(0), graft.SparkEntry.queries(n)) { body =>
           val t0 = System.nanoTime()
           body
           Some((System.nanoTime() - t0) / 1e9)

@@ -1,36 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r16 optimization-round dev probe: stage-by-stage timings and shape
   * statistics for the faces VERDICT r15 targets (triangles skew,
   * pagerank/ppr iteration, pca covariance, char entropy A/B). Bench
-  * parity: local[SPARK_GRAFT_CPUS], shuffle partitions = cpus, codegen
-  * cache 1000, noop sink, clearCache + persistent-RDD release between
-  * measured bodies. Usage: R16Probe <subcommand> [sfDir]. */
+  * parity: Bench's session, noop sink, and Bench's release of cached
+  * and persisted blocks between measured bodies (timing a whole face:
+  * tools.PerfProbe). Usage: R16Probe <subcommand> [sfDir]. */
 object R16Probe {
   def main(args: Array[String]): Unit = {
     val sub = args.headOption.getOrElse("tri")
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    // warm the scan path like Bench does
-    try spark.read.parquet(s"$dir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => () }
-    def cleanup(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-    }
+    val spark = graft.Bench.session(dir,
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     def t[A](label: String)(body: => A): A = {
       val t0 = System.nanoTime(); val r = body
       println(f"[r16] $label%-34s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
@@ -65,19 +48,6 @@ object R16Probe {
           expr("percentile(od, 0.99)"),
           sum(col("od") * (col("od") - 1) / 2).as("wedges")).show(false)
         od.orderBy(col("od").desc).limit(10).show(false)
-      case "q" =>
-        // bench-parity timing of any declared queries: R16Probe q <sf> <names...>
-        val names = args.drop(2)
-        names.foreach { n =>
-          val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            noop(graft.SparkEntry.queries(n)(spark, dir))
-            val dt = (System.nanoTime() - t0) / 1e9
-            cleanup(); dt
-          }
-          println(f"[r16] $n median=${times.sorted.apply(times.size / 2)}%.2fs all=${times.map(x => f"$x%.2f").mkString(",")}")
-        }
       case "plan" =>
         // AQE-final executed plan of a declared query at bench parity
         val n = args(2)
@@ -145,7 +115,7 @@ object R16Probe {
           t("pca full face") {
             noop(graft.SparkEntry.queries("q_pca_project")(spark, dir))
           }
-          cleanup()
+          graft.Bench.release(spark)
         }
       case "xmodal" =>
         val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -179,7 +149,7 @@ object R16Probe {
             noop(graft.ext.SimSearch.bruteTopK(e, qv, "vec_id", "embedding",
               k = 5, excludeSelf = false))
           }
-          cleanup()
+          graft.Bench.release(spark)
         }
       case "spread" =>
         // single-row-group scan-parallelism A/B: the fixture parquet is
@@ -194,11 +164,11 @@ object R16Probe {
           t("repetition (scan as-is)") {
             noop(graft.ext.Repetition.withRepetitionStats(docs, "text"))
           }
-          cleanup()
+          graft.Bench.release(spark)
           t("repetition (spread 32)") {
             noop(graft.ext.Repetition.withRepetitionStats(sp, "text"))
           }
-          cleanup()
+          graft.Bench.release(spark)
           val doubled = docs.select(col("doc_id"),
             when(col("doc_id") % 7 === 0,
               concat(col("text"), lit(" "), col("text")))
@@ -206,7 +176,7 @@ object R16Probe {
           t("intradoc (scan as-is)") {
             noop(graft.ext.Repetition.removeRepeatedSpans(doubled, "text", 10))
           }
-          cleanup()
+          graft.Bench.release(spark)
           val doubledSp = sp.select(col("doc_id"),
             when(col("doc_id") % 7 === 0,
               concat(col("text"), lit(" "), col("text")))
@@ -214,7 +184,7 @@ object R16Probe {
           t("intradoc (spread 32)") {
             noop(graft.ext.Repetition.removeRepeatedSpans(doubledSp, "text", 10))
           }
-          cleanup()
+          graft.Bench.release(spark)
         }
       case "char" =>
         // charEntropy: interpreted run-length fold vs explode+agg+join,
@@ -226,7 +196,7 @@ object R16Probe {
           t("fold (current)") {
             noop(graft.ext.TextStats.charEntropy(docs, "doc_id", "text"))
           }
-          cleanup()
+          graft.Bench.release(spark)
           t("explode+agg (old shape)") {
             val base = docs.select(col("doc_id").as("id"),
               regexp_replace(graft.ext.TextStats.normalized(
@@ -241,7 +211,7 @@ object R16Probe {
                 .as("e"), count(lit(1)).as("nd"), max("nD").as("n"))
             noop(base.join(ent, Seq("id"), "left"))
           }
-          cleanup()
+          graft.Bench.release(spark)
         }
       case other => println(s"unknown subcommand $other")
     }

@@ -396,8 +396,7 @@ class BenchSpec extends AnyFunSuite {
     val run = Bench.Run(sf, "4", Map("q_a" -> 1.0), Nil, Nil, Nil,
       Map("q_a" -> 3), Map("q_a" -> 1.3), Set.empty, budgetHit = false,
       repCutHit = false, wallHit = false, wallSec = 2.0)
-    val (line, files) = Bench.render(run, o, official = false,
-      "bench_floor_dev.json")
+    val (line, files) = Bench.render(run, o, official = false)
     val mapper = new ObjectMapper()
     val parsed = (files.map(_._2) :+ line).map(mapper.readTree)
     assert(parsed.map(j => Option(j.get("sf")).getOrElse(j.get("__sf"))
@@ -407,6 +406,21 @@ class BenchSpec extends AnyFunSuite {
     // the floor file reads back through its own gate
     assert(floorOf(files(2)._2, sf, "4").floors ==
       Map("q_a" -> 0.5))
+  }
+
+  test("a dev run renders only _dev artifacts, so it leaves the official " +
+      "detail, evidence, floor and line files untouched") {
+    val o = Bench.adjudicate(Map("q_a" -> Seq(1.0)), Bench.FloorFile.empty,
+      Set("q_a"), official = false, errors = 0, wallHit = false,
+      rebaseRequested = false, (_, _) => Nil, () => true)
+    val run = Bench.Run("/d/sf0.01", "4", Map("q_a" -> 1.0), Nil, Nil, Nil,
+      Map("q_a" -> 1), Map.empty, Set.empty, budgetHit = false,
+      repCutHit = false, wallHit = false, wallSec = 1.0)
+    val official = Seq("bench_detail.json", "floor_evidence_auto.json",
+      "bench_floor.json", "bench_line.json")
+    assert(Bench.render(run, o, official = false)._2.map(_._1) ==
+      official.map(_.replace(".json", "_dev.json")))
+    assert(Bench.render(run, o, official = true)._2.map(_._1) == official)
   }
 
   test("adjudicate: a carried suspect is probed first and re-pinned on " +

@@ -10,9 +10,9 @@ import graft.tools.CensusGate
 class CensusGateSpec extends AnyFunSuite {
   private val base = Map(
     "q_a" -> Map("exchanges" -> 2, "broadcasts" -> 1, "smj" -> 0,
-      "cartesian" -> 0, "bnl" -> 0, "wgl" -> 0, "topk" -> 1, "wscg" -> 3),
+      "cartesian" -> 0, "bnl" -> 0, "wgl" -> 0, "topk" -> 1),
     "q_b" -> Map("exchanges" -> 0, "broadcasts" -> 0, "smj" -> 0,
-      "cartesian" -> 0, "bnl" -> 0, "wgl" -> 0, "topk" -> 0, "wscg" -> 2))
+      "cartesian" -> 0, "bnl" -> 0, "wgl" -> 0, "topk" -> 0))
 
   test("identical census is green") {
     val (vio, notes) = CensusGate.diffOf(base, base)
@@ -61,19 +61,19 @@ class CensusGateSpec extends AnyFunSuite {
     assert(CensusGate.diffOf(base, cur)._1 == Seq("q_a: plan build errored"))
   }
 
-  test("advisory features (broadcasts/wgl/topk/wscg) note, never fail") {
-    val cur = base.updated("q_a", base("q_a").updated("wscg", 1))
+  test("advisory features (broadcasts/wgl/topk) note, never fail") {
+    val cur = base.updated("q_a", base("q_a").updated("topk", 3))
     val (vio, notes) = CensusGate.diffOf(base, cur)
-    assert(vio.isEmpty && notes.exists(_.contains("wscg 3 -> 1")))
+    assert(vio.isEmpty && notes.exists(_.contains("topk 1 -> 3")))
   }
 
   test("parseCensus round-trips the census line format including " +
       "error rows") {
     val txt =
-      """{"q":"q_a","exchanges":2,"broadcasts":1,"smj":0,"cartesian":0,"bnl":0,"wgl":0,"topk":1,"wscg":3}
+      """{"q":"q_a","exchanges":2,"broadcasts":1,"smj":0,"cartesian":0,"bnl":0,"wgl":0,"topk":1}
         |{"q":"q_err","error":"build"}""".stripMargin
     val m = CensusGate.parseCensus(txt)
-    assert(m("q_a")("exchanges") == 2 && m("q_a")("wscg") == 3)
+    assert(m("q_a")("exchanges") == 2 && m("q_a")("topk") == 1)
     assert(m("q_err").contains("error"))
   }
 
